@@ -265,8 +265,11 @@ class AnnIndexStore:
                 hit = F.col("cluster") == c
                 aggs.append(F.sum(F.when(hit, 1).otherwise(0))
                             .alias(f"n{c}"))
-                aggs.append(F.sum(F.when(hit, F.col("own_ppm")))
-                            .alias(f"s{c}"))
+                # a zero-norm vector's own_ppm is NULL: a cell of only
+                # such vectors sums to 0, not NULL (the segment is
+                # already written when the stats are read)
+                aggs.append(F.coalesce(F.sum(F.when(hit, F.col("own_ppm"))),
+                                       F.lit(0)).alias(f"s{c}"))
             df = df.observe(obs, aggs[0], *aggs[1:])
         df.repartition("cluster").write.partitionBy("cluster") \
             .mode("overwrite").parquet(os.path.join(self.path, rel))
@@ -280,7 +283,8 @@ class AnnIndexStore:
             seg = self.spark.read.parquet(os.path.join(self.path, rel))
             stats = [[int(r[0]), int(r[1]), int(r[2])] for r in
                      seg.groupBy("cluster")
-                     .agg(F.count(F.lit(1)), F.sum("own_ppm"))
+                     .agg(F.count(F.lit(1)),
+                          F.coalesce(F.sum("own_ppm"), F.lit(0)))
                      .orderBy("cluster").collect()]
         return rel, stats
 

@@ -598,8 +598,10 @@ def ivf_index_build(corpus: DataFrame,
     # identical formula to the stats path's __own (element_at at the
     # argmax position equals array_max even on score ties, because
     # array_position picks the first maximum); norm is referenced as
-    # the materialized column for the same no-recompute reason
-    own = "CAST(floor(array_max(__sc) / norm * 1000000) AS BIGINT)"
+    # the materialized column for the same no-recompute reason; a
+    # zero-norm vector has no cosine, so its own_ppm is NULL (plain
+    # division raises under ANSI mode)
+    own = "CAST(floor(try_divide(array_max(__sc), norm) * 1000000) AS BIGINT)"
     cols = [F.col(id_col), F.col("q"), F.col("norm"),
             F.expr(cluster).alias("cluster"),
             F.expr(own).alias("own_ppm")]
@@ -697,8 +699,8 @@ def ivf_index_stats(index: DataFrame,
                      .alias("mean_own_cos_ppm"))
                 .orderBy("cluster"))
     scores = _ivf_scores_spark(cents, vec="q")
-    own = (f"floor(element_at({scores}, CAST(cluster AS INT) + 1)"
-           f" / norm * 1000000)")
+    own = (f"floor(try_divide(element_at({scores}, CAST(cluster AS INT) + 1),"
+           f" norm) * 1000000)")
     return (index
             .select("cluster", F.expr(own).alias("__own"))
             .groupBy("cluster")

@@ -248,7 +248,12 @@ def split_key_updates(events: DataFrame, key_cols: list[str]) -> DataFrame:
 
     Key change detection compares the key fields re-serialized through
     the same from_json/to_json canonicalization on both images, so
-    field order and non-key fields in the images don't matter."""
+    field order and non-key fields in the images don't matter.
+
+    One pass over the input: each row becomes a 1- or 2-element array
+    of event structs (the row itself, or DELETE(old key) + INSERT(new
+    key)) that is exploded, where a filter/union of three legs would
+    scan the batch three times."""
     key_schema = ", ".join(f"{k} string" for k in key_cols)
     old_key = F.to_json(F.from_json("old_json", key_schema))
     new_key = F.to_json(F.from_json("key_json", key_schema))
@@ -257,20 +262,18 @@ def split_key_updates(events: DataFrame, key_cols: list[str]) -> DataFrame:
         & F.col("old_json").isNotNull()
         & (old_key != new_key)
     )
-    # withColumn keeps any extra columns (e.g. a streaming event_time)
-    normal = events.filter(~F.coalesce(changed, F.lit(False)))
-    dels = (
-        events.filter(changed)
-        .withColumn("query_type", F.lit("DELETE"))
-        .withColumn("key_json", old_key)
-        .withColumn("new_json", F.lit(None).cast("string"))
+    null = F.lit(None).cast("string")
+
+    def event(**overrides) -> F.Column:
+        # every input column is carried (e.g. a streaming event_time)
+        return F.struct(*[overrides.get(c, F.col(c)).alias(c) for c in events.columns])
+
+    split = F.array(
+        event(query_type=F.lit("DELETE"), key_json=old_key, new_json=null),
+        event(query_type=F.lit("INSERT"), old_json=null),
     )
-    ins = (
-        events.filter(changed)
-        .withColumn("query_type", F.lit("INSERT"))
-        .withColumn("old_json", F.lit(None).cast("string"))
-    )
-    return normal.unionByName(dels).unionByName(ins)
+    one = F.when(F.coalesce(changed, F.lit(False)), split).otherwise(F.array(event()))
+    return events.select(F.explode(one).alias("__e")).select("__e.*")
 
 
 def drop_obsolete(events: DataFrame, checkpoint_ts: int) -> DataFrame:
@@ -290,16 +293,30 @@ def rewrite_ddl(ddl: str, rules: dict[str, str]) -> str:
     return out
 
 
-def split_batch_at_ddls(batch: DataFrame) -> list[tuple[DataFrame, dict | None]]:
+def scan_ddls(batch: DataFrame) -> tuple[list[dict], list[str]]:
+    """The batch's DDL rows in commit order, and the tables its DML rows
+    touch.  One job: the table set rides an ``observe()`` on the DDL
+    probe's own scan (it is bounded by the tables in the feed)."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    dml_table = F.when(~F.col("is_ddl"), F.col("table_name"))
+    rows = (batch.observe(obs, F.collect_set(dml_table).alias("tables"))
+            .filter(F.col("is_ddl")).collect())
+    ddls = sorted((r.asDict() for r in rows), key=lambda d: d["commit_ts"])
+    return ddls, sorted(obs.get["tables"])
+
+
+def split_batch_at_ddls(batch: DataFrame,
+                        ddls: list[dict] | None = None) -> list[tuple[DataFrame, dict | None]]:
     """C3 DDL barrier: slice a micro-batch into [(dml_segment, ddl)...]
     where each segment holds DMLs with commit_ts <= the following DDL's
     commit_ts, applied before that DDL executes.  DDL rows are few —
-    collecting them is the barrier coordination the reference does
-    across consumer partitions."""
-    ddls = sorted(
-        (r.asDict() for r in batch.filter(F.col("is_ddl")).collect()),
-        key=lambda d: d["commit_ts"],
-    )
+    collecting them (:func:`scan_ddls`, unless the caller already
+    did) is the barrier coordination the reference does across
+    consumer partitions."""
+    if ddls is None:
+        ddls = scan_ddls(batch)[0]
     dml = batch.filter(~F.col("is_ddl"))
     if not ddls:
         return [(dml, None)]
@@ -333,8 +350,9 @@ class ParquetTableStore:
       atomically (`os.replace`), so a crash anywhere mid-apply leaves
       the previous fully-consistent snapshot (data + watermark move
       together — exactly-once survives crashes).
-    - ``<base>/<table>/files/v<N>/_kb=<k>/`` — parquet for key-hash
-      bucket ``k`` committed at version N.  An apply writes ONLY the
+    - ``<base>/<table>/files/v<N>/_kb=<k>/`` — ONE parquet file for
+      key-hash bucket ``k`` committed at version N (the staged write
+      is clustered on the bucket).  An apply writes ONLY the
       buckets its keys hash into and re-points untouched buckets at
       their existing dirs: apply cost is proportional to touched
       buckets, never O(table).  Unreferenced dirs are GC'd after
@@ -560,8 +578,9 @@ class ParquetTableStore:
         touched = sorted(int(b) for b in manifest["buckets"])
         self._commit_buckets(table, manifest, touched, out, manifest["watermark"])
 
-    def _bucket_expr(self, keys: list[str]) -> F.Column:
-        return F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(self.n_buckets))
+    def _bucket_expr(self, keys: list) -> F.Column:
+        """Key-hash bucket of ``keys`` (column names or typed Columns)."""
+        return F.pmod(F.hash(*keys), F.lit(self.n_buckets))
 
     def apply_dml(self, table: str, events: DataFrame) -> None:
         """Idempotent apply: dedup to terminal event per key, then
@@ -575,17 +594,14 @@ class ParquetTableStore:
         events = split_key_updates(events, keys)
         last = dedup_last_per_key(events, ["key_json"]).cache()
         try:
-            if last.isEmpty():
+            probe = self._probe_pinned(table, last)
+            if probe is None:
                 return
-            applied_max = last.agg(F.max("commit_ts")).collect()[0][0]
+            applied_max, touched = probe
             manifest = self._read_manifest(table)
             parsed_keys = self._parse_typed(last, "key_json", {
                 k: self._key_type(table, k) for k in keys
             })
-            touched = sorted(
-                r["_kb"] for r in
-                parsed_keys.select(self._bucket_expr(keys).alias("_kb")).distinct().collect()
-            )
             existing = self._read_buckets(table, touched)
             survivors = existing.join(F.broadcast(parsed_keys), on=keys, how="left_anti")
             schema = T._parse_datatype_string(self.schemas[table])
@@ -597,6 +613,29 @@ class ParquetTableStore:
             self._commit_buckets(table, manifest, touched, out, applied_max)
         finally:
             last.unpersist()
+
+    def _probe_pinned(self, table: str, pinned: DataFrame) -> tuple[int, list[int]] | None:
+        """The one probe action of an apply, on a ``cache()``-pinned
+        event frame: a no-op write materializes the pin, and an
+        ``observe()`` on it returns what the commit needs — ``None``
+        for an empty frame, else (max commit_ts, sorted bucket ids of
+        the frame's keys).  The bucket set is bounded by
+        ``n_buckets``, so it is safe to bring to the driver."""
+        from pyspark.sql import Observation
+
+        keys = self.key_cols[table]
+        parsed = F.from_json("key_json", ", ".join(f"{k} string" for k in keys))
+        bucket = self._bucket_expr(
+            [parsed[k].cast(self._key_type(table, k)) for k in keys])
+        obs = Observation()
+        (pinned.observe(obs, F.count(F.lit(1)).alias("n"),
+                        F.max("commit_ts").alias("ts"),
+                        F.collect_set(bucket).alias("kb"))
+         .write.format("noop").mode("overwrite").save())
+        m = obs.get
+        if not m["n"]:
+            return None
+        return m["ts"], sorted(m["kb"])
 
     def _list_staged_buckets(self, stage: str) -> set[str]:
         """Bucket directories a staged ``partitionBy("_kb")`` write
@@ -620,7 +659,11 @@ class ParquetTableStore:
         version = manifest["version"] + 1
         stage_rel = os.path.join("files", f"v{version}")
         stage = os.path.join(self.table_path(table), stage_rel)
-        out.write.partitionBy("_kb").mode("overwrite").parquet(stage)
+        # cluster on the bucket column first (the AnnIndexStore segment
+        # write's idiom): an unshuffled partitionBy emits one file per
+        # (upstream task x bucket), which the next apply's scan then
+        # opens; one exchange on _kb writes each bucket as one file
+        out.repartition("_kb").write.partitionBy("_kb").mode("overwrite").parquet(stage)
         buckets = dict(manifest["buckets"])
         written = self._list_staged_buckets(stage)
         # Point EVERY bucket the write produced — the fold may emit
@@ -667,8 +710,10 @@ def apply_cdc_batch(store: ParquetTableStore, batch: DataFrame, checkpoint_ts: i
     [dml_segment, ddl] slice, group DMLs per table (C2), apply
     idempotently (C4), then execute the DDL once (C3/C7/C9)."""
     batch = drop_obsolete(batch, checkpoint_ts) if checkpoint_ts >= 0 else batch
-    for segment, ddl in split_batch_at_ddls(batch):
-        tables = [r["table_name"] for r in segment.select("table_name").distinct().collect()]
+    ddls, tables = scan_ddls(batch)
+    for segment, ddl in split_batch_at_ddls(batch, ddls):
+        # tables come from the whole batch: a segment holding none of
+        # a table's events costs that table's apply one probe job
         for t in tables:
             if t in store.schemas:
                 store.apply_dml(t, segment.filter(F.col("table_name") == t))

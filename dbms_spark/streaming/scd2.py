@@ -28,7 +28,6 @@ from pyspark.sql import types as T
 
 from dbms_spark.streaming.cdc import (
     ParquetTableStore,
-    dedup_last_per_key,
     drop_obsolete,
     split_key_updates,
 )
@@ -138,18 +137,13 @@ class Scd2TableStore(ParquetTableStore):
         events = split_key_updates(events, keys)
         events = events.filter(~F.col("is_ddl")).cache()
         try:
-            if events.isEmpty():
+            # probing every event, not one per key, yields the same
+            # bucket set and max commit_ts
+            probe = self._probe_pinned(table, events)
+            if probe is None:
                 return
-            applied_max = events.agg(F.max("commit_ts")).collect()[0][0]
+            applied_max, touched = probe
             manifest = self._read_manifest(table)
-            batch_keys = self._parse_typed(
-                dedup_last_per_key(events, ["key_json"]), "key_json",
-                {k: self._key_type(table, k) for k in keys},
-            )
-            touched = sorted(
-                r["_kb"] for r in
-                batch_keys.select(self._bucket_expr(keys).alias("_kb")).distinct().collect()
-            )
             existing = self._read_buckets(table, touched)
             out = scd2_apply(existing, events, keys, self.schemas[table]).withColumn(
                 "_kb", self._bucket_expr(keys)

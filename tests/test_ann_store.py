@@ -299,3 +299,29 @@ def test_projected_store_indexes_the_pca_space(spark, emb, sf_dir, tmp_path):
     per_q = after.groupBy("query_id").count().collect()
     assert per_q and all(r["count"] == 5 for r in per_q)
     assert store._read_manifest().get("projection") is not None
+
+
+@pytest.mark.parametrize("observe_cells", [AnnIndexStore._OBSERVE_CELLS, 0],
+                         ids=["observed", "fallback"])
+def test_zero_norm_vectors_get_a_defined_stat(spark, emb, quant, tmp_path,
+                                              monkeypatch, observe_cells):
+    """A zero-norm vector has no cosine: its own_ppm is NULL.  A segment
+    whose only cell holds such vectors commits with an own-sum of 0 on
+    both stats paths (observe on the write, or the post-write
+    aggregate past the observe cap) instead of raising once the
+    segment has landed."""
+    monkeypatch.setattr(AnnIndexStore, "_OBSERVE_CELLS", observe_cells)
+    cents, _ = quant
+    store = AnnIndexStore(spark, str(tmp_path / "ix"))
+    store.build(emb, quantizers=(cents, None))
+    dim = len(emb.first()["embedding"])
+    zero = spark.createDataFrame([(10_000 + i, [0.0] * dim) for i in range(3)],
+                                 "vec_id long, embedding array<double>")
+    store.append(zero, batch_id=1)
+    m = store._read_manifest()
+    assert m["watermark"] == 1
+    landed = store.read().filter("vec_id >= 10000").select("cluster", "own_ppm").collect()
+    assert len(landed) == 3 and all(r["own_ppm"] is None for r in landed)
+    cell = landed[0]["cluster"]
+    assert m["seg_stats"][m["segments"][-1]] == [[cell, 3, 0]]
+    assert isinstance(store.drift()["retrain"], bool)

@@ -245,6 +245,13 @@ def test_apply_prunes_untouched_buckets(store, spark):
     assert untouched_dirs and all(os.path.isdir(d) for d in untouched_dirs)
     got = {r["id"]: r["v"] for r in store.read("t1").collect()}
     assert got[7] == "new" and got[8] == "v8" and len(got) == 32
+    # every bucket a commit writes is ONE parquet file (the staged
+    # write is clustered on the bucket column), not one per task
+    for m in (m1, m2):
+        for rel in m["buckets"].values():
+            files = [f for f in os.listdir(os.path.join(store.table_path("t1"), rel))
+                     if f.endswith(".parquet")]
+            assert len(files) == 1, (rel, files)
     # on-disk bucket dirs == exactly what the RETAINED snapshots
     # (current + previous, retention=2) reference — nothing more
     retained = store._retained_manifests("t1", m2)
@@ -354,6 +361,30 @@ def test_key_changing_update_splits(store, spark):
     store.apply_dml("t1", rekey)
     got = {r["id"]: r["v"] for r in store.read("t1").collect()}
     assert got == {9: "a2", 2: "b"}, f"old-key row must be deleted, got {got}"
+
+
+def test_split_key_updates_scans_input_once(spark, tmp_path):
+    """The split is one pass: its optimized plan over a parquet frame
+    holds a single scan, and a key-changing UPDATE still becomes
+    DELETE(old key) + INSERT(new key) beside the untouched rows."""
+    path = str(tmp_path / "ev")
+    make_events(spark, [
+        ev("t1", "INSERT", 1, {"id": 1}, {"id": 1, "v": "a"}),
+        ev("t1", "UPDATE", 5, {"id": 9}, {"id": 9, "v": "a2"}, old={"id": 1, "v": "a"}),
+        ev("t1", "UPDATE", 6, {"id": 2}, {"id": 2, "v": "b2"}, old={"id": 2, "v": "b"}),
+    ]).write.parquet(path)
+    out = cdc.split_key_updates(spark.read.parquet(path), ["id"])
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Relation ") == 1, plan
+    assert out.columns == cdc.CDC_EVENT_SCHEMA.names
+    got = sorted((r["commit_ts"], r["query_type"], json.loads(r["key_json"]),
+                  r["new_json"] is None, r["old_json"] is None) for r in out.collect())
+    assert got == [
+        (1, "INSERT", {"id": 1}, False, True),
+        (5, "DELETE", {"id": "1"}, True, False),
+        (5, "INSERT", {"id": 9}, False, True),
+        (6, "UPDATE", {"id": 2}, False, False),
+    ]
 
 
 def test_key_changing_update_scd2(spark, tmp_path):
