@@ -87,6 +87,60 @@ def flag_unstable(timings: dict[str, float],
             if spreads.get(q, 0.0) > max(0.5 * t, 0.5)]
 
 
+#: the harness running bench.py keeps only a ~3.9 KB TAIL of its
+#: output and parses the final JSON line out of it (a clipped FRONT
+#: once lost the headline total)
+LINE_LIMIT = 3000
+
+
+def fit_line(timings: dict[str, float], reprobe: dict[str, float],
+             reprobe_spread: dict[str, float], total_reprobed: float,
+             sf, total: float) -> tuple[str, list[str]]:
+    """The stdout JSON line, fitted to ``LINE_LIMIT`` bytes, and the
+    warnings saying what was dropped.  Key order puts "queries" first
+    and metric/value last, so a front-clipped tail still carries the
+    totals.  An oversized line first keeps only the slowest-N
+    per-query entries (down to 15); if that is still too long, the
+    reprobe map keeps only its worst-spread entries."""
+    def render(qmap: dict[str, float], rmap: dict[str, float]) -> str:
+        payload: dict = {"queries": qmap}
+        if len(qmap) < len(timings):
+            payload["queries_omitted"] = len(timings) - len(qmap)
+        if reprobe:
+            # PER-QUERY reprobe values, not just their count: a
+            # q302-style contention spike (raw 30.2 s, standalone
+            # re-probe 3.5 s) must adjudicate itself from this one
+            # line.  Placed before the totals so a front-clipped tail
+            # still carries metric/value.
+            payload["reprobe"] = rmap
+            if len(rmap) < len(reprobe):
+                payload["reprobe_omitted"] = len(reprobe) - len(rmap)
+            payload["reprobed"] = len(reprobe)
+            payload["value_reprobed"] = total_reprobed
+        payload.update({"sf": sf, "unit": "sec",
+                        "metric": "total_query_wall_seconds", "value": total})
+        return json.dumps(payload) + "\n"
+
+    line = render(timings, reprobe)
+    if len(line) <= LINE_LIMIT:
+        return line, []
+    by_time = sorted(timings, key=lambda q: -timings[q])
+    for n_keep in range(120, 14, -15):
+        qmap = {q: timings[q] for q in by_time[:n_keep]}
+        line = render(qmap, reprobe)
+        if len(line) <= LINE_LIMIT:
+            return line, [f"JSON line exceeded tail window, kept slowest "
+                          f"{n_keep} of {len(timings)} queries"]
+    by_spread = sorted(reprobe, key=lambda q: -reprobe_spread.get(q, 0.0))
+    r_keep = len(reprobe)
+    while r_keep and len(line) > LINE_LIMIT:
+        r_keep -= 1
+        line = render(qmap, {q: reprobe[q] for q in by_spread[:r_keep]})
+    return line, [f"JSON line exceeded tail window, kept slowest {len(qmap)} "
+                  f"of {len(timings)} queries and the {r_keep} worst-spread "
+                  f"of {len(reprobe)} reprobes ({len(line)} bytes)"]
+
+
 def clear_persistent_rdds(spark) -> None:
     """Between-query cleanup, round 10: ``spark.catalog.clearCache()``
     only drops SQL-cache entries — ``localCheckpoint()`` blocks (the
@@ -230,44 +284,10 @@ def main() -> None:
             json.dump(full, f, indent=1, sort_keys=True)
         print(f"bench: full per-query timings -> {full_path}", file=sys.stderr)
 
-    # The driver captures only a ~3.9 KB TAIL of this process's output and
-    # parses the final JSON line out of it (round 3: the line's FRONT was
-    # clipped, losing the headline total).  Two defenses: (1) key order puts
-    # "queries" first and metric/value last, so a front-clipped tail still
-    # carries the totals; (2) if the line would crowd the window, keep only
-    # the slowest-N per-query entries rather than letting the capture clip
-    # arbitrarily.
-    def render(qmap: dict[str, float], omitted: int) -> str:
-        payload: dict = {"queries": qmap}
-        if omitted:
-            payload["queries_omitted"] = omitted
-        if reprobe:
-            # Round-11 (judge ask #2): PER-QUERY reprobe values in the
-            # driver-visible line, not just the count — a q302-style
-            # contention spike (raw 30.2 s, standalone re-probe 3.5 s)
-            # must adjudicate itself from this one artifact.  Placed
-            # before the totals so a front-clipped tail still carries
-            # metric/value.
-            payload["reprobe"] = reprobe
-            payload["reprobed"] = len(reprobe)
-            payload["value_reprobed"] = total_reprobed
-        payload.update({"sf": sf, "unit": "sec",
-                        "metric": "total_query_wall_seconds", "value": total})
-        return json.dumps(payload) + "\n"
-
-    line = render(timings, 0)
-    # Shrink the per-query map until the line fits the driver's ~3.9 KB
-    # tail capture window; the reprobe map is never dropped (it is the
-    # adjudication record and is small — only flagged queries appear).
-    if len(line) > 3000:
-        for n_keep in range(120, 14, -15):
-            slowest = dict(
-                sorted(timings.items(), key=lambda kv: -kv[1])[:n_keep])
-            line = render(slowest, len(timings) - len(slowest))
-            if len(line) <= 3000:
-                print(f"bench: JSON line exceeded tail window, kept slowest "
-                      f"{n_keep} of {len(timings)} queries", file=sys.stderr)
-                break
+    line, notes = fit_line(timings, reprobe, reprobe_spread, total_reprobed,
+                           sf, total)
+    for note in notes:
+        print(f"bench: {note}", file=sys.stderr)
     os.write(real_stdout, line.encode())
 
 

@@ -59,6 +59,7 @@ from pyspark.sql import types as T
 
 from dbms_spark.llm import similarity as sim
 from dbms_spark.plans.parallelism import literal_df
+from dbms_spark.streaming.cdc import commit_manifest
 
 
 class AnnIndexStore:
@@ -97,15 +98,7 @@ class AnnIndexStore:
                 "quantizers": None, "schema": None, "baseline": None}
 
     def _commit_manifest(self, m: dict) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        hdir = os.path.join(self.path, "manifests")
-        os.makedirs(hdir, exist_ok=True)
-        with open(os.path.join(hdir, f"v{m['version']}.json"), "w") as f:
-            json.dump(m, f)
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, self._manifest_path())   # atomic on POSIX
+        commit_manifest(self.path, m)
 
     def _retained(self, current: dict) -> list[dict]:
         out = {current["version"]: current}

@@ -340,6 +340,31 @@ def chunked_checksum_crc32(
     )
 
 
+def diff_chunk_sums(src_sums: DataFrame, dst_sums: DataFrame) -> DataFrame:
+    """The chunk-sum comparison every chunked verify shares: one
+    full-outer join on ``chunk_id`` keeping the chunks where any sum
+    column differs, null-safely (a chunk present on one side only
+    differs).  The sum columns are whatever the inputs carry besides
+    ``chunk_id`` — ``cnt, h0..h3`` (MD5) or ``cnt, crc_sum`` (CRC32) —
+    so one comparison serves both methods.  Output: ``chunk_id,
+    src_cnt, dst_cnt`` (a side missing the chunk counts 0)."""
+    sums = [c for c in src_sums.columns if c != "chunk_id"]
+    sa = src_sums.select("chunk_id", *[F.col(c).alias(f"src_{c}") for c in sums])
+    sb = dst_sums.select("chunk_id", *[F.col(c).alias(f"dst_{c}") for c in sums])
+    same = F.lit(True)
+    for c in sums:
+        same = same & F.col(f"src_{c}").eqNullSafe(F.col(f"dst_{c}"))
+    return (
+        sa.join(sb, "chunk_id", "full_outer")
+        .filter(~same)
+        .select(
+            "chunk_id",
+            F.coalesce("src_cnt", F.lit(0)).alias("src_cnt"),
+            F.coalesce("dst_cnt", F.lit(0)).alias("dst_cnt"),
+        )
+    )
+
+
 def compare_chunked_crc32(
     src: DataFrame,
     dst: DataFrame,
@@ -351,20 +376,9 @@ def compare_chunked_crc32(
     """J2 on the CRC32 path: join per-chunk CRC32 sums, keep unequal
     chunks.  Same output contract as :func:`compare_chunked`."""
     cols = cols or src.columns
-    a = chunked_checksum_crc32(src, src_chunk_id, cols, oracle_empty_is_null)
-    b = chunked_checksum_crc32(dst, dst_chunk_id, cols, oracle_empty_is_null)
-    sa = a.select("chunk_id", F.col("cnt").alias("src_cnt"), F.col("crc_sum").alias("src_crc"))
-    sb = b.select("chunk_id", F.col("cnt").alias("dst_cnt"), F.col("crc_sum").alias("dst_crc"))
-    j = sa.join(sb, "chunk_id", "full_outer")
-    same = (
-        F.col("src_cnt").eqNullSafe(F.col("dst_cnt"))
-        & F.col("src_crc").eqNullSafe(F.col("dst_crc"))
-    )
-    return j.filter(~same).select(
-        "chunk_id",
-        F.coalesce("src_cnt", F.lit(0)).alias("src_cnt"),
-        F.coalesce("dst_cnt", F.lit(0)).alias("dst_cnt"),
-    )
+    return diff_chunk_sums(
+        chunked_checksum_crc32(src, src_chunk_id, cols, oracle_empty_is_null),
+        chunked_checksum_crc32(dst, dst_chunk_id, cols, oracle_empty_is_null))
 
 
 def compare_chunked(
@@ -377,39 +391,14 @@ def compare_chunked(
 ) -> DataFrame:
     """J2: join per-chunk checksums of both sides, keep unequal chunks.
 
-    Output: chunk_id, src_cnt, dst_cnt, equal (bool) — one row per
-    chunk that differs (missing chunk on a side => counts 0).
-    Drill-down (J3 / row fetch) then touches only these chunks.
+    Output: chunk_id, src_cnt, dst_cnt — one row per chunk that
+    differs (missing chunk on a side => counts 0).  Drill-down (J3 /
+    row fetch) then touches only these chunks.
     """
     cols = cols or src.columns
-    a = chunked_checksum(src, src_chunk_id, cols, oracle_empty_is_null)
-    b = chunked_checksum(dst, dst_chunk_id, cols, oracle_empty_is_null)
-    sa = a.select(
-        "chunk_id",
-        F.col("cnt").alias("src_cnt"),
-        *[F.col(f"h{i}").alias(f"src_h{i}") for i in range(4)],
-    )
-    sb = b.select(
-        "chunk_id",
-        F.col("cnt").alias("dst_cnt"),
-        *[F.col(f"h{i}").alias(f"dst_h{i}") for i in range(4)],
-    )
-    j = sa.join(sb, "chunk_id", "full_outer")
-    same = (
-        F.col("src_cnt").eqNullSafe(F.col("dst_cnt"))
-        & F.col("src_h0").eqNullSafe(F.col("dst_h0"))
-        & F.col("src_h1").eqNullSafe(F.col("dst_h1"))
-        & F.col("src_h2").eqNullSafe(F.col("dst_h2"))
-        & F.col("src_h3").eqNullSafe(F.col("dst_h3"))
-    )
-    return (
-        j.filter(~same)
-        .select(
-            "chunk_id",
-            F.coalesce("src_cnt", F.lit(0)).alias("src_cnt"),
-            F.coalesce("dst_cnt", F.lit(0)).alias("dst_cnt"),
-        )
-    )
+    return diff_chunk_sums(
+        chunked_checksum(src, src_chunk_id, cols, oracle_empty_is_null),
+        chunked_checksum(dst, dst_chunk_id, cols, oracle_empty_is_null))
 
 
 def seek_columns(
@@ -512,6 +501,16 @@ def _both_counts(src: DataFrame, dst: DataFrame) -> tuple[int, int]:
     return s["cnt"], d["cnt"]
 
 
+def in_chunks(df: DataFrame, ids: list[int], col: str = "chunk_id") -> DataFrame:
+    """Rows of ``df`` whose ``col`` is one of ``ids``: a broadcast
+    semi-join against the id list shipped as a literal relation.  This
+    is the exactness boundary behind every range-pruned chunk read
+    (:func:`drilldown_chunks`, ``reverify``): the capped range
+    predicate may read gap chunks, this drops them."""
+    ids_df = literal_df(df.sparkSession, [(i,) for i in ids], f"{col} int")
+    return df.join(F.broadcast(ids_df), col, "left_semi")
+
+
 def drilldown_chunks(
     src: DataFrame,
     dst: DataFrame,
@@ -526,10 +525,9 @@ def drilldown_chunks(
     range predicate (contiguous mismatched chunks coalesce; capped at
     ``max_ranges`` OR-terms — the same shape as reverify's pushdown,
     so mass corruption at millions of chunks can't blow up the plan
-    text), and exactness from a per-side semi-join against the
-    requested chunk ids — rows of gap chunks swallowed by the cap
-    never enter the diff.  Output matches :func:`multiset_diff` plus
-    the chunk_id."""
+    text), and exactness from :func:`in_chunks` on each side — rows
+    of gap chunks swallowed by the cap never enter the diff.  Output
+    matches :func:`multiset_diff` plus the chunk_id."""
     from dbms_spark.plans.chunker import ranges_predicate
 
     if not chunk_ids:
@@ -537,16 +535,12 @@ def drilldown_chunks(
         return empty.filter(F.lit(False)).withColumn("chunk_id", F.lit(0))
     ids = sorted(set(chunk_ids))
     pred = ranges_predicate(plan, ids, max_ranges)
-    spark = src.sparkSession
-    ids_df = literal_df(spark, [(i,) for i in ids], "__cid int")
 
     def side(df: DataFrame) -> DataFrame:
         sub = df.filter(F.expr(pred))
-        return (
-            sub.withColumn("__cid", assign_chunk_id(plan, sub).cast("int"))
-            .join(F.broadcast(ids_df), "__cid", "left_semi")
-            .drop("__cid")
-        )
+        return in_chunks(
+            sub.withColumn("__cid", assign_chunk_id(plan, sub).cast("int")), ids, "__cid"
+        ).drop("__cid")
 
     diff = multiset_diff(side(src), side(dst), cols)
     if all(k in diff.columns for k in plan.key_cols):

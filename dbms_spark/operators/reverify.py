@@ -8,47 +8,44 @@ path).  Re-expressed Spark-first:
 
 - the LEDGER is a parquet table of per-chunk checksum sums from the
   last verified run (``chunk_id, cnt, h0..h3``)
-- a re-verify recomputes SOURCE sums (one scan), anti-joins the ledger
-  to find changed/new/vanished chunks — O(chunks) rows, kept as a
-  DISTRIBUTED relation end to end (neither the sums nor the changed
-  chunk IDS are ever collected; the only per-chunk data crossing to
-  the driver is the ≤ ``max_ranges`` coalesced (lo, hi) ranges for
-  the pushdown text, plus scalar counts for the report)
-- runs of contiguous changed ids coalesce DISTRIBUTIVELY
-  (:func:`_changed_ranges`: anti-join islands + a gap-rank cap that
-  swallows the smallest gaps first, same semantics as
-  ``chunker._cap_runs``), so driver memory is O(``max_ranges``)
-  regardless of churn
+- a re-verify recomputes SOURCE sums (one scan, persisted) and diffs
+  them against the ledger (``compare.diff_chunk_sums``) to find
+  changed/new/vanished chunks; their ids are collected in ONE action.
+  The sums themselves never reach the driver.
+- the changed ids live on the driver, like the reference's chunk
+  lists in its meta DB.  That never raises the driver's memory order:
+  the driver already holds the ``ChunkPlan`` (n_chunks - 1 bound
+  tuples, each at least as large as an id), so a list of at most
+  n_chunks ints is bounded by the plan it came from.
 - only the changed chunks' key ranges are read on the TARGET side:
-  the capped range predicate reaches the parquet/JDBC scan
-  (PushedFilters); when the cap forces a superset read, exactness is
-  restored by a semi-join of the target sums against the changed-id
-  relation
+  contiguous ids coalesce into a range predicate capped at
+  ``max_ranges`` OR-terms (``chunker.ranges_predicate``) that reaches
+  the parquet/JDBC scan (PushedFilters)
+- both sides' sums are restricted to the changed ids by the broadcast
+  semi-join drilldown also uses (``compare.in_chunks``), so a read the
+  cap widened still compares exactly the changed chunks; the
+  mismatched ids are collected once
 
 At 100 TB this turns a nightly full compare into an incremental one
-proportional to churn, with driver memory O(max_ranges) and plan size
-O(max_ranges) even at reference-style 500-row chunks (millions of
-chunks, high churn).
+proportional to churn, with pushdown text O(max_ranges) even at
+reference-style 500-row chunks (millions of chunks, high churn).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbms_spark.operators.compare import chunked_checksum
+from dbms_spark.operators.compare import chunked_checksum, diff_chunk_sums, in_chunks
 from dbms_spark.plans.chunker import (
     ChunkPlan,
     _cap_runs,
     _runs,
     assign_chunk_id,
-    chunk_range_predicate,
     ranges_predicate,
 )
-
-_SUM_COLS = ["cnt", "h0", "h1", "h2", "h3"]
 
 
 def save_ledger(sums: DataFrame, path: str) -> None:
@@ -75,109 +72,31 @@ def changed_chunks(src_sums: DataFrame, ledger: DataFrame | None) -> DataFrame:
     of them when there is no ledger yet)."""
     if ledger is None:
         return src_sums.select("chunk_id")
-    a = src_sums.select("chunk_id", *[F.col(c).alias(f"a_{c}") for c in _SUM_COLS])
-    b = ledger.select("chunk_id", *[F.col(c).alias(f"b_{c}") for c in _SUM_COLS])
-    j = a.join(b, "chunk_id", "full_outer")
-    same = None
-    for c in _SUM_COLS:
-        eq = F.col(f"a_{c}").eqNullSafe(F.col(f"b_{c}"))
-        same = eq if same is None else (same & eq)
-    return j.filter(~same).select("chunk_id")
-
-
-def changed_ranges_df(ids_df: DataFrame, max_ranges: int) -> DataFrame:
-    """Distributed run-length coalescing AS A RELATION: a chunk-id
-    relation -> ≤ ``max_ranges`` (lo, hi) range rows.
-
-    Islands come from two anti-joins (an id starts a run iff id-1 is
-    absent, ends one iff id+1 is absent — shuffles on the id, fully
-    distributed), paired by rank; windows touch only the O(n_runs)
-    runs relation, never the raw id set.  The cap keeps the
-    ``max_ranges - 1`` LARGEST inter-run gaps as separators (ties →
-    later gap), bit-matching the driver-side ``chunker._cap_runs``
-    semantics, so the superset read grows by the fewest extra chunks
-    possible.  Gate: q222 hash-checks this relation against a DuckDB
-    windowed-islands oracle."""
-    ids = ids_df.select(F.col("chunk_id").cast("bigint").alias("cid"))
-    starts = ids.join(ids.select((F.col("cid") + 1).alias("cid")),
-                      "cid", "left_anti")
-    ends = ids.join(ids.select((F.col("cid") - 1).alias("cid")),
-                    "cid", "left_anti")
-    runs = (
-        starts.select(F.col("cid").alias("lo"))
-        .withColumn("k", F.row_number().over(Window.orderBy("lo")))
-        .join(ends.select(F.col("cid").alias("hi"))
-              .withColumn("k", F.row_number().over(Window.orderBy("hi"))), "k")
-        .select("lo", "hi")
-    )
-    w_lo = Window.orderBy("lo")
-    merged = (
-        runs.withColumn("gap", F.col("lo") - F.lag("hi").over(w_lo))
-        .withColumn("grank", F.row_number().over(
-            Window.orderBy(F.desc_nulls_last("gap"), F.desc("lo"))))
-        .withColumn("sep", F.when(
-            F.col("gap").isNotNull() & (F.col("grank") <= max_ranges - 1),
-            1).otherwise(0))
-        .withColumn("mgrp", F.sum("sep").over(
-            w_lo.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy("mgrp")
-        .agg(F.min("lo").alias("lo"), F.max("hi").alias("hi"))
-    )
-    return merged.select("lo", "hi")
-
-
-def _changed_ranges(ids_df: DataFrame, max_ranges: int) -> list[tuple[int, int]]:
-    """Driver-side materialization of :func:`changed_ranges_df` — the
-    ONLY per-chunk rows that reach the driver in a reverify round."""
-    return [(r["lo"], r["hi"]) for r in
-            changed_ranges_df(ids_df, max_ranges).orderBy("lo").collect()]
-
-
-def _ranges_to_predicate(plan: ChunkPlan, ranges: list[tuple[int, int]],
-                         dialect: str = "spark") -> str:
-    if not ranges:
-        return "FALSE"
-    if len(ranges) == 1 and ranges[0] == (0, plan.n_chunks - 1):
-        return "1 = 1"
-    return " OR ".join(
-        f"({chunk_range_predicate(plan, lo, hi, dialect)})" for lo, hi in ranges
-    )
-
-
-def target_predicate(plan: ChunkPlan, ids: list[int],
-                     max_ranges: int = 256, dialect: str = "spark") -> str:
-    """Bounded pushdown text for the target-side read of the changed
-    chunks — delegated to :func:`chunker.ranges_predicate` (shared
-    with compare.drilldown_chunks).  Callers MUST still restrict the
-    compared chunk ids exactly (the semi-join in :func:`reverify`) —
-    the predicate is an I/O-pruning optimization, not the correctness
-    boundary."""
-    return ranges_predicate(plan, ids, max_ranges, dialect)
+    return diff_chunk_sums(src_sums, ledger).select("chunk_id")
 
 
 @dataclass(frozen=True)
 class ReverifyReport:
-    """Scale-shaped report: counts and the ≤ max_ranges coalesced
-    ranges are driver-side scalars; the full id sets stay DISTRIBUTED
-    (``checked_df`` / ``mismatched_df``).  The list accessors
-    (``checked_chunks`` / ``mismatched_chunks``) collect on demand —
-    fine for tests and small verdicts, the caller's explicit choice at
-    high churn."""
+    """One round's verdict: the recompared and mismatched chunk ids
+    (sorted), the plan's chunk count, and the ≤ max_ranges coalesced
+    ranges the target read was pruned to."""
 
-    checked_df: DataFrame          # chunk ids recompared (distributed)
-    mismatched_df: DataFrame       # of those, ids differing from dst
-    n_checked: int
-    n_mismatched: int
+    checked_chunks: list[int]      # chunk ids recompared
+    mismatched_chunks: list[int]   # of those, ids differing from dst
     total_chunks: int
     checked_ranges: list[tuple[int, int]] = field(default_factory=list)
 
     @property
-    def checked_chunks(self) -> list[int]:
-        return sorted(r["chunk_id"] for r in self.checked_df.collect())
+    def n_checked(self) -> int:
+        return len(self.checked_chunks)
 
     @property
-    def mismatched_chunks(self) -> list[int]:
-        return sorted(r["chunk_id"] for r in self.mismatched_df.collect())
+    def n_mismatched(self) -> int:
+        return len(self.mismatched_chunks)
+
+
+def _ids(df: DataFrame) -> list[int]:
+    return sorted(r["chunk_id"] for r in df.select("chunk_id").collect())
 
 
 def reverify(
@@ -203,43 +122,18 @@ def reverify(
     does not save the ledger must call ``sums.unpersist()`` itself, or
     a long-lived session accumulates cached chunk-sum relations.
 
-    Scale shape: chunk sums AND changed-chunk ids stay distributed
-    end to end; the only per-chunk driver transfer is the
-    ≤ ``max_ranges`` coalesced (lo, hi) ranges for the target pushdown
-    (``_changed_ranges``), so driver memory is O(max_ranges) at any
-    churn.  The capped predicate reaches the scan (PushedFilters) and
-    the semi-join below guarantees exactness when the cap forces a
-    superset read."""
+    Driver transfer: two id-only collects (changed, then mismatched),
+    each at most ``plan.n_chunks`` ints; the sums stay distributed."""
     cols = cols or src.columns
-    n_chunks = len(plan.bounds) + 1
     src_sums = chunked_checksum(
         src, assign_chunk_id(plan, src), cols, oracle_empty_is_null
     ).persist()
-    to_check_df = changed_chunks(src_sums, ledger)
-    n_checked = to_check_df.count()
-    if n_checked == 0:
-        empty = to_check_df.filter("1=0")
-        return src_sums, ReverifyReport(empty, empty, 0, 0, n_chunks, [])
-    # target side reads ONLY the changed chunks' key ranges: the capped
-    # range predicate reaches the scan (PushedFilters); the semi-joins
-    # below pin the compared chunk set exactly even if the cap widened
-    # the read
-    ranges = _changed_ranges(to_check_df, max_ranges)
-    pred = _ranges_to_predicate(plan, ranges)
-    dst_sub = dst.filter(F.expr(pred))
+    ids = _ids(changed_chunks(src_sums, ledger))
+    if not ids:
+        return src_sums, ReverifyReport([], [], plan.n_chunks, [])
+    dst_sub = dst.filter(F.expr(ranges_predicate(plan, ids, max_ranges)))
     dst_sums = chunked_checksum(
-        dst_sub, assign_chunk_id(plan, dst_sub), cols, oracle_empty_is_null
-    ).join(to_check_df, "chunk_id", "left_semi")
-    a = src_sums.join(to_check_df, "chunk_id", "left_semi").select(
-        "chunk_id", *[F.col(c).alias(f"a_{c}") for c in _SUM_COLS]
-    )
-    b = dst_sums.select("chunk_id", *[F.col(c).alias(f"b_{c}") for c in _SUM_COLS])
-    j = a.join(b, "chunk_id", "full_outer")
-    same = None
-    for c in _SUM_COLS:
-        eq = F.col(f"a_{c}").eqNullSafe(F.col(f"b_{c}"))
-        same = eq if same is None else (same & eq)
-    mismatched_df = j.filter(~same).select("chunk_id")
-    n_bad = mismatched_df.count()
+        dst_sub, assign_chunk_id(plan, dst_sub), cols, oracle_empty_is_null)
+    bad = _ids(diff_chunk_sums(in_chunks(src_sums, ids), in_chunks(dst_sums, ids)))
     return src_sums, ReverifyReport(
-        to_check_df, mismatched_df, n_checked, n_bad, n_chunks, ranges)
+        ids, bad, plan.n_chunks, _cap_runs(_runs(ids), max_ranges))

@@ -7728,13 +7728,12 @@ def q221_bloom_sized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q222 — distributed changed-range coalescing (reverify round 6): a
+# q222 — changed-range coalescing (the reverify/drilldown pushdown): a
 # scattered chunk-id set (pseudo-random holes via a Knuth-hash filter
 # on the id VALUE, so presence is deterministic per id) collapses into
-# <= 16 (lo, hi) ranges — anti-join islands + gap-rank cap on the
-# Spark side vs a windowed gaps-and-islands oracle in DuckDB.  This is
-# the relation whose rows are the ONLY per-chunk data reaching the
-# driver in an incremental verify round.
+# <= 16 (lo, hi) ranges — the driver-side ``chunker._cap_runs(_runs(
+# ids))`` that ``ranges_predicate`` renders for every range-pruned
+# chunk read, vs a windowed gaps-and-islands oracle in DuckDB.
 # ---------------------------------------------------------------------------
 
 _Q222_SQL = """
@@ -7769,12 +7768,13 @@ FROM m GROUP BY mgrp ORDER BY lo
 
 @register("q222_changed_ranges", _Q222_SQL)
 def q222_changed_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbms_spark.operators.reverify import changed_ranges_df
+    from dbms_spark.plans.chunker import _cap_runs, _runs
 
-    ids = (load_table(spark, sf_dir, "orders")
-           .select((F.col("o_orderkey") % 4096).alias("chunk_id")).distinct()
-           .filter("(chunk_id * 2654435761) % 16 < 11"))
-    return changed_ranges_df(ids, max_ranges=16).orderBy("lo")
+    ids = sorted(r["chunk_id"] for r in
+                 load_table(spark, sf_dir, "orders")
+                 .select((F.col("o_orderkey") % 4096).alias("chunk_id")).distinct()
+                 .filter("(chunk_id * 2654435761) % 16 < 11").collect())
+    return literal_df(spark, _cap_runs(_runs(ids), 16), "lo bigint, hi bigint")
 
 
 # ---------------------------------------------------------------------------
@@ -9315,8 +9315,7 @@ def q271_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (lo, hi, n_missing) rows the hash compare pins exactly.
 # The screen a row-count compare passes while whole id batches are
 # missing from the middle.  Islands via two self-anti-joins shuffling
-# only ids; windows touch the runs relation, never the raw key set —
-# the reverify q222 recipe promoted to a validation rule.
+# only ids; windows touch the runs relation, never the raw key set.
 # ---------------------------------------------------------------------------
 
 

@@ -336,6 +336,41 @@ def split_batch_at_ddls(batch: DataFrame,
 # Apply: idempotent delete+insert into a parquet table store
 # ---------------------------------------------------------------------------
 
+def parse_typed(df: DataFrame, col: str, types: dict[str, str]) -> DataFrame:
+    """Parse a JSON object column into typed columns, tolerating
+    string-quoted scalars: the TiCDC-ish envelope carries typed JSON
+    values while OMS carries everything as strings (message/oceanbase/
+    message.go postStruct is map[string]any) — parsing as all-strings
+    then casting accepts both."""
+    as_strings = ", ".join(f"{name} string" for name in types)
+    return df.select(F.from_json(F.col(col), as_strings).alias("r")).select(
+        *[F.col(f"r.{name}").cast(t).alias(name) for name, t in types.items()]
+    )
+
+
+def _write_json_durably(path: str, obj: dict) -> None:
+    with open(path, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+
+
+def commit_manifest(root: str, manifest: dict) -> None:
+    """Commit a store snapshot: the ``manifests/v{version}.json`` log
+    entry first (time travel), then the atomic replace of the current
+    pointer ``manifest.json``.  A crash between the two leaves an
+    unreferenced log entry the next commit overwrites.  Both files are
+    fsynced before the replace: otherwise the rename can survive a
+    power loss while the content does not, and an empty manifest
+    wedges every later read of the store."""
+    hdir = os.path.join(root, "manifests")
+    os.makedirs(hdir, exist_ok=True)
+    _write_json_durably(os.path.join(hdir, f"v{manifest['version']}.json"), manifest)
+    current = os.path.join(root, "manifest.json")
+    _write_json_durably(current + ".tmp", manifest)
+    os.replace(current + ".tmp", current)  # atomic on POSIX
+
+
 @dataclass
 class ParquetTableStore:
     """Micro target 'database': a versioned, hash-bucketed parquet
@@ -389,17 +424,7 @@ class ParquetTableStore:
         return os.path.join(self.table_path(table), "manifests")
 
     def _commit_manifest(self, table: str, manifest: dict) -> None:
-        os.makedirs(self.table_path(table), exist_ok=True)
-        # snapshot log entry first (time travel), then the atomic
-        # current-pointer replace — a crash between the two leaves an
-        # unreferenced log entry the next commit overwrites
-        os.makedirs(self._history_dir(table), exist_ok=True)
-        with open(os.path.join(self._history_dir(table), f"v{manifest['version']}.json"), "w") as f:
-            json.dump(manifest, f)
-        tmp = self._manifest_path(table) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path(table))  # atomic on POSIX
+        commit_manifest(self.table_path(table), manifest)
 
     def _retained_manifests(self, table: str, current: dict) -> list[dict]:
         """The snapshots time travel keeps: current + up to
@@ -599,13 +624,13 @@ class ParquetTableStore:
                 return
             applied_max, touched = probe
             manifest = self._read_manifest(table)
-            parsed_keys = self._parse_typed(last, "key_json", {
+            parsed_keys = parse_typed(last, "key_json", {
                 k: self._key_type(table, k) for k in keys
             })
             existing = self._read_buckets(table, touched)
             survivors = existing.join(F.broadcast(parsed_keys), on=keys, how="left_anti")
             schema = T._parse_datatype_string(self.schemas[table])
-            upserts = self._parse_typed(
+            upserts = parse_typed(
                 last.filter(F.col("query_type") != "DELETE"), "new_json",
                 {f.name: f.dataType.simpleString() for f in schema.fields},
             )
@@ -685,17 +710,6 @@ class ParquetTableStore:
         }
         self._commit_manifest(table, new_manifest)
         self._gc(table, new_manifest)
-
-    def _parse_typed(self, df: DataFrame, col: str, types: dict[str, str]) -> DataFrame:
-        """Parse a JSON object column into typed columns, tolerating
-        string-quoted scalars: the TiCDC-ish envelope carries typed
-        JSON values while OMS carries everything as strings
-        (message/oceanbase/message.go postStruct is map[string]any) —
-        parsing as all-strings then casting accepts both."""
-        as_strings = ", ".join(f"{name} string" for name in types)
-        return df.select(F.from_json(F.col(col), as_strings).alias("r")).select(
-            *[F.col(f"r.{name}").cast(t).alias(name) for name, t in types.items()]
-        )
 
     def _key_type(self, table: str, key: str) -> str:
         schema = T._parse_datatype_string(self.schemas[table])
@@ -778,11 +792,6 @@ def apply_cdc_batch_jdbc(batch: DataFrame, url: str, table: str,
     routed = batch.filter(
         F.col("table_name") == (source_table or table.split(".")[-1]))
 
-    def parse(df: DataFrame, col: str, types: dict[str, str]) -> DataFrame:
-        as_strings = ", ".join(f"{name} string" for name in types)
-        return df.select(F.from_json(F.col(col), as_strings).alias("r")).select(
-            *[F.col(f"r.{name}").cast(t).alias(name) for name, t in types.items()])
-
     def scoped(props: dict[str, str] | None, cols: list[str]):
         """createTableColumnTypes trimmed to the frame's columns (the
         delete staging carries keys only); paren-aware split so
@@ -808,10 +817,10 @@ def apply_cdc_batch_jdbc(batch: DataFrame, url: str, table: str,
         if len(segments) == 1 or not segment.isEmpty():
             ev = split_key_updates(segment, key_cols)
             last = dedup_last_per_key(ev, ["key_json"])
-            dels = parse(last.filter(F.col("query_type") == "DELETE"),
-                         "key_json", key_types)
-            ups = parse(last.filter(F.col("query_type") != "DELETE"),
-                        "new_json", row_types)
+            dels = parse_typed(last.filter(F.col("query_type") == "DELETE"),
+                               "key_json", key_types)
+            ups = parse_typed(last.filter(F.col("query_type") != "DELETE"),
+                              "new_json", row_types)
             write_jdbc(dels, url, stg_d, mode="overwrite",
                        properties=scoped(properties, key_cols))
             totals["deletes"] += execute(spark, url, [

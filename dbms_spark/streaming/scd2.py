@@ -42,7 +42,7 @@ def scd2_schema(row_schema: str) -> str:
 
 def _parse_all_strings(df: DataFrame, col: str, types: dict[str, str]) -> DataFrame:
     """JSON object -> typed columns, tolerant of string-quoted scalars
-    (same contract as ParquetTableStore._parse_typed), keeping the
+    (same contract as cdc.parse_typed), keeping the
     event bookkeeping columns."""
     as_strings = ", ".join(f"{n} string" for n in types)
     parsed = df.withColumn("__r", F.from_json(F.col(col), as_strings))

@@ -174,3 +174,31 @@ class TestMultiOldCompare:
             [sys.executable, os.path.join(REPO, "tools/bench_compare.py"),
              paths[0], paths[2]], capture_output=True, text=True)
         assert set(json.loads(out1.stdout)["regressions"]) == {"q41", "q9"}
+
+
+class TestFitLine:
+    """The stdout line must fit the driver's tail capture however many
+    queries and reprobes a run has, and always end with the totals."""
+
+    def test_large_reprobe_map_is_trimmed_to_fit(self):
+        timings = {f"q{i:03d}_some_descriptive_gate_name": 0.5 + i / 100
+                   for i in range(315)}
+        names = sorted(timings)
+        reprobe = {q: 1.0 for q in names[:80]}
+        spread = {q: i / 10 for i, q in enumerate(names[:80])}
+        line, notes = bench.fit_line(timings, reprobe, spread, 123.4, 0.1, 456.7)
+        assert len(line.encode()) <= 3000
+        payload = json.loads(line)
+        assert payload["metric"] == "total_query_wall_seconds"
+        assert payload["value"] == 456.7
+        assert payload["reprobed"] == 80
+        kept = payload["reprobe"]
+        assert 0 < len(kept) < 80
+        assert payload["reprobe_omitted"] == 80 - len(kept)
+        # the kept reprobes are the worst-spread ones
+        assert set(kept) == set(sorted(spread, key=lambda q: -spread[q])[:len(kept)])
+        assert notes and "reprobes" in notes[0]
+
+    def test_small_line_untouched(self):
+        line, notes = bench.fit_line({"q01": 1.0}, {}, {}, 1.0, 0.1, 1.0)
+        assert json.loads(line)["queries"] == {"q01": 1.0} and notes == []

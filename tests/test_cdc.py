@@ -266,6 +266,46 @@ def test_apply_prunes_untouched_buckets(store, spark):
     assert on_disk == referenced
 
 
+@pytest.mark.parametrize("kind", ["table_store", "ann_store"])
+def test_manifest_commit_fsyncs_before_replace(spark, tmp_path, monkeypatch, kind):
+    """Durability, shown by call order: the history entry and the temp
+    manifest are both fsynced BEFORE the replace publishes the new
+    pointer — else a power loss can keep the rename but not the
+    content, and an empty manifest.json wedges every later apply."""
+    from dbms_spark.llm.ann_store import AnnIndexStore
+
+    if kind == "table_store":
+        store = cdc.ParquetTableStore(spark, str(tmp_path), {"t1": "id bigint"},
+                                      {"t1": ["id"]})
+        root = store.table_path("t1")
+
+        def commit(m):
+            store._commit_manifest("t1", m)
+    else:
+        ann = AnnIndexStore(spark, str(tmp_path / "ix"))
+        root, commit = ann.path, ann._commit_manifest
+    events = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        events.append(("fsync", os.fstat(fd).st_ino))
+        return real_fsync(fd)
+
+    def replace(src, dst):
+        events.append(("replace", os.stat(src).st_ino))
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    commit({"version": 3, "watermark": 7})
+    monkeypatch.undo()
+    hist = os.stat(os.path.join(root, "manifests", "v3.json")).st_ino
+    current = os.stat(os.path.join(root, "manifest.json")).st_ino
+    published = events.index(("replace", current))
+    synced = {ino for op, ino in events[:published] if op == "fsync"}
+    assert {hist, current} <= synced, events
+
+
 def test_apply_crash_leaves_consistent_snapshot(store, spark, monkeypatch):
     """A failure before the manifest commit must leave data AND
     watermark at the previous snapshot (exactly-once across crashes)."""

@@ -9,7 +9,12 @@ import json
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
+from dbms_spark.engine import DbmsEngine
+from dbms_spark.operators import reverify as R
+from dbms_spark.plans import chunker
+from dbms_spark.sources.catalog import load_table
 from dbms_spark.streaming import cdc
 
 #: verb -> max Spark jobs per call
@@ -18,6 +23,14 @@ JOB_BUDGET = {
     # rides its observe) + 2 for the pinned dedup and its observed
     # probe + the broadcast of the batch keys + the clustered write
     "apply_cdc_batch": 7,
+    # clean 10-chunk verify: the chunk-sum diff collect (both sides'
+    # parallelism guards and sum exchanges) + both row counts in one
+    # unioned collect
+    "data_verify": 8,
+    # changed-id collect (source sums persisted, ledger diff: 5) + the
+    # mismatched-id collect (range-pruned target sums and one
+    # broadcast of the id list: 4), the report reads included
+    "reverify": 9,
 }
 
 
@@ -89,3 +102,44 @@ def test_apply_cdc_batch_with_ddl_job_budget(spark, loaded):
     assert jobs <= 2 * JOB_BUDGET["apply_cdc_batch"], jobs
     assert "z int" in store.schemas["orders"]
     assert store.read("orders").count() == 400 + 20 - 10
+
+
+@pytest.fixture()
+def verify_pair(spark, sf_dir, tmp_path):
+    """orders as the source and a parquet copy of it as the target,
+    with a 10-chunk plan — the shape the cutover verbs see."""
+    src = load_table(spark, sf_dir, "orders")
+    src.write.parquet(str(tmp_path / "dst"))
+    dst = spark.read.parquet(str(tmp_path / "dst"))
+    return src, dst, chunker.plan_chunks(src, ["o_orderkey"], 10)
+
+
+def test_data_verify_job_budget(spark, verify_pair):
+    src, dst, plan = verify_pair
+    rep = []
+    jobs = _jobs(spark, "budget-data_verify", lambda: rep.append(
+        DbmsEngine(spark).data_verify(src, dst, "orders", plan=plan)))
+    assert rep[0][0].equal
+    assert jobs <= JOB_BUDGET["data_verify"], jobs
+
+
+def test_reverify_job_budget(spark, verify_pair, tmp_path):
+    src, dst, plan = verify_pair
+    sums, _ = R.reverify(src, dst, plan, ledger=None)
+    R.save_ledger(sums, str(tmp_path / "ledger"))
+    ledger = R.load_ledger(spark, str(tmp_path / "ledger"))
+    drifted = src.withColumn(
+        "o_totalprice",
+        F.when(F.col("o_orderkey") % 501 == 0, F.col("o_totalprice") + 1.0)
+        .otherwise(F.col("o_totalprice")))
+    out = []
+
+    def run():
+        sums, rep = R.reverify(drifted, dst, plan, ledger)
+        out.append((rep.checked_chunks, rep.mismatched_chunks))
+        sums.unpersist()
+
+    jobs = _jobs(spark, "budget-reverify", run)
+    checked, mismatched = out[0]
+    assert checked and checked == mismatched
+    assert jobs <= JOB_BUDGET["reverify"], jobs

@@ -58,9 +58,9 @@ SHUFFLE_BUDGET = {
     "q220_repair_apply": 7,
     # round-6 additions
     "q221_bloom_sized": 1,         # one word groupBy at non-default (m,k)
-    # distinct + 2 anti-joins + rank-pair join + runs windows (the
-    # window chain is over the O(n_runs) relation, not the raw ids)
-    "q222_changed_ranges": 6,
+    # the capped ranges are a literal relation: the id distinct runs
+    # in a collect at construction, the driver coalesces
+    "q222_changed_ranges": 0,
     "q223_grouped_ndv": 2,         # (grp,bucket) registers + grp estimate
     "q224_kmv_sketch": 1,          # one dedup shuffle; top-k is TakeOrdered
     "q225_kmv_ndv": 1,             # sketch dedup; estimate agg is 1-row local

@@ -94,30 +94,33 @@ def test_target_predicate_bounded_at_high_churn():
     n = 10_000
     plan = chunker.ChunkPlan(("k",), tuple((i,) for i in range(1, n)))
     changed = list(range(0, n, 2))               # 5,000 isolated runs
-    pred = R.target_predicate(plan, changed, max_ranges=64)
+    pred = chunker.ranges_predicate(plan, changed, max_ranges=64)
     assert pred.count(" OR ") <= 63 + 2 * 64     # runs + per-range parts
     assert len(pred) < 64 * 200                  # bounded text, ~? per range
     # un-capped per-chunk form would be ~5,000 OR-terms; sanity that the
     # cap actually engaged
     assert len(R._cap_runs(R._runs(changed), 64)) == 64
     # full-churn degenerates to the whole-table read, constant text
-    assert R.target_predicate(plan, list(range(n))) == "1 = 1"
-    assert R.target_predicate(plan, []) == "FALSE"
+    assert chunker.ranges_predicate(plan, list(range(n))) == "1 = 1"
+    assert chunker.ranges_predicate(plan, []) == "FALSE"
 
 
 def test_reverify_never_collects_sums(orders, plan, spark, tmp_path, monkeypatch):
-    """Driver-memory contract: only chunk-ID relations cross to the
-    driver — no collected DataFrame carries the checksum sum columns."""
+    """Driver-memory contract: the only per-chunk data crossing to the
+    driver is chunk ids — every collected frame is id-only, holds at
+    most ``plan.n_chunks`` rows (the plan the driver already holds
+    bounds it), and never carries the checksum sum columns."""
     try:  # Spark 4: the concrete class overrides the abstract base
         from pyspark.sql.classic.dataframe import DataFrame as SparkDF
     except ImportError:
         from pyspark.sql import DataFrame as SparkDF
-    collected_schemas = []
+    collected = []
     orig = SparkDF.collect
 
     def spy(self):
-        collected_schemas.append(set(self.columns))
-        return orig(self)
+        rows = orig(self)
+        collected.append((set(self.columns), len(rows)))
+        return rows
 
     monkeypatch.setattr(SparkDF, "collect", spy)
     sums, _ = R.reverify(orders, orders, plan, ledger=None)
@@ -129,10 +132,10 @@ def test_reverify_never_collects_sums(orders, plan, spark, tmp_path, monkeypatch
         .otherwise(F.col("o_totalprice")),
     )
     R.reverify(src2, orders, plan, ledger=ledger)
-    assert collected_schemas, "spy did not engage"
-    for cols in collected_schemas:
-        assert not (cols & {"cnt", "h0", "h1", "h2", "h3"}), \
-            f"sums collected to driver: {cols}"
+    assert collected, "spy did not engage"
+    for cols, n in collected:
+        assert cols == {"chunk_id"}, f"non-id frame collected: {cols}"
+        assert n <= plan.n_chunks, f"{n} rows collected, plan has {plan.n_chunks}"
 
 
 def test_capped_read_still_exact(orders, spark, tmp_path):
@@ -153,54 +156,6 @@ def test_capped_read_still_exact(orders, spark, tmp_path):
     assert capped.checked_chunks == uncapped.checked_chunks
     assert capped.mismatched_chunks == uncapped.mismatched_chunks
     assert len(uncapped.checked_chunks) > 1      # the cap actually bit
-
-
-def test_changed_ranges_distributed_matches_driver_cap(spark):
-    """_changed_ranges (anti-join islands + gap-rank cap) returns
-    EXACTLY what the driver-side _cap_runs(_runs(ids)) would — on an
-    adversarial mix of isolated ids, long runs, and uneven gaps, at
-    several cap levels including cap=1 and cap >= n_runs (no-op)."""
-    ids = sorted(set(
-        list(range(0, 40, 2)) + list(range(100, 140)) +
-        [200, 205, 206, 207, 300] + list(range(1000, 1003))))
-    df = spark.createDataFrame([(i,) for i in ids], "chunk_id BIGINT")
-    for cap in (1, 2, 5, 16, 99):
-        want = R._cap_runs(R._runs(ids), cap)
-        got = R._changed_ranges(df, cap)
-        assert got == want, f"cap={cap}: {got} != {want}"
-
-
-def test_reverify_driver_transfer_bounded_at_50pct_churn(spark, monkeypatch):
-    """The round-5 watch item, closed: at 10^5 chunks with 50% churn in
-    the WORST (alternating) pattern — 50,000 isolated runs — the only
-    per-chunk rows that cross to the driver are the <= max_ranges
-    coalesced ranges.  A collect spy sums every collected row count;
-    no call returns more than max_ranges rows and none carries ids or
-    sums."""
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame as SparkDF
-    except ImportError:
-        from pyspark.sql import DataFrame as SparkDF
-    collected = []
-    orig = SparkDF.collect
-
-    def spy(self):
-        rows = orig(self)
-        collected.append((set(self.columns), len(rows)))
-        return rows
-
-    monkeypatch.setattr(SparkDF, "collect", spy)
-    max_ranges = 64
-    changed = spark.range(0, 100_000, 2).select(
-        F.col("id").alias("chunk_id"))           # 50,000 isolated runs
-    ranges = R._changed_ranges(changed, max_ranges)
-    assert len(ranges) <= max_ranges
-    assert ranges[0][0] == 0 and ranges[-1][1] == 99_998
-    assert sum(hi - lo + 1 for lo, hi in ranges) >= 50_000  # covers all
-    assert collected, "spy did not engage"
-    for cols, n in collected:
-        assert n <= max_ranges, f"{n} rows collected to driver ({cols})"
-        assert not (cols & {"chunk_id", "cnt", "h0", "h1", "h2", "h3"})
 
 
 def test_save_ledger_unpersists(orders, plan, tmp_path):
