@@ -174,6 +174,17 @@ def main(argv: list[str] | None = None) -> int:
     if args.cpus:
         os.environ["SPARK_GRAFT_CPUS"] = args.cpus
 
+    if args.verb == "status":     # a journal read: no Spark session
+        from dbms_spark.operators.migrate import ChunkLedger
+
+        out: dict = {}
+        for event in ChunkLedger(args.ledger, args.task).state().values():
+            agg = out.setdefault(event["status"], {"chunks": 0, "rows": 0})
+            agg["chunks"] += 1
+            agg["rows"] += event["rows"]
+        print(json.dumps({"verb": "status", "task": args.task, "by_status": out}))
+        return 0
+
     from dbms_spark import get_spark
     from dbms_spark.engine import DbmsEngine
 
@@ -257,19 +268,6 @@ def main(argv: list[str] | None = None) -> int:
         rows = [r.asDict() for r in column_profile(spark, args.sf_dir, args.table).collect()]
         print(json.dumps({"verb": "profile", "table": args.table, "columns": rows},
                          default=str))
-        return 0
-
-    if args.verb == "status":
-        from pyspark.sql import functions as F
-
-        from dbms_spark.operators.migrate import ChunkLedger
-
-        led = ChunkLedger(spark, args.ledger, args.task)
-        st = led.state().groupBy("status").agg(
-            F.count(F.lit(1)).alias("chunks"), F.sum("rows").alias("rows"))
-        out = {r["status"]: {"chunks": r["chunks"], "rows": r["rows"]}
-               for r in st.collect()}
-        print(json.dumps({"verb": "status", "task": args.task, "by_status": out}))
         return 0
 
     if args.verb == "cdc":

@@ -49,19 +49,14 @@ class DbmsEngine:
         task: str = "default",
         fmt: str = "parquet",
     ) -> int:
-        """stmt_migrate analogue: optionally chunked + resumable."""
+        """stmt_migrate analogue: optionally chunked + resumable.
+        Returns the rows written, counted on the writes themselves."""
         if n_chunks <= 1 or not key_cols:
-            if fmt == "parquet":
-                migrate_ops.write_parquet(src, sink_path)
-            else:
-                migrate_ops.write_csv(src, sink_path)
-            return src.count()
+            return migrate_ops.write_counted(src, sink_path, fmt)
         plan = chunker.plan_chunks(src, key_cols, n_chunks)
-        ledger = (
-            migrate_ops.ChunkLedger(self.spark, ledger_path, task) if ledger_path else None
-        )
+        ledger = migrate_ops.ChunkLedger(ledger_path, task) if ledger_path else None
         return migrate_ops.migrate_chunked(
-            self.spark, src, chunker.predicates(plan), sink_path, ledger, fmt
+            src, chunker.predicates(plan), sink_path, ledger, fmt
         )
 
     def csv_migrate(self, src: DataFrame, sink_path: str,

@@ -238,20 +238,6 @@ def crc32_sum_agg(crc_col: Column | str = "row_crc") -> Column:
     return F.sum(c.cast(T.DecimalType(38, 0))).alias("crc_sum")
 
 
-def table_checksum_crc32(df: DataFrame, cols: list[str] | None = None,
-                         oracle_empty_is_null: bool = False) -> DataFrame:
-    """One-row (cnt, crc_sum) — the reference's CRC32 table checksum.
-    Same distributed shape as :func:`table_checksum`: map-side crc32,
-    partial-aggregated sum, single-row shuffle."""
-    from dbms_spark.plans.parallelism import ensure_parallelism
-
-    src = ensure_parallelism(df)
-    return (
-        src.select(row_crc32(src, cols, oracle_empty_is_null).alias("row_crc"))
-        .agg(F.count(F.lit(1)).alias("cnt"), crc32_sum_agg())
-    )
-
-
 # ---------------------------------------------------------------------------
 # DuckDB-side canonicalization (SQL text) — mirrors the Spark emission
 # ---------------------------------------------------------------------------

@@ -10,7 +10,8 @@ data_compare_seek.go:49-430) as declarative Spark plans:
 - J1 multiset diff  -> groupBy-count + full-outer join (hash or
   sort-merge picked by Catalyst; null-safe key equality).
 - J2 chunk checksum -> map-side chunk-id + partial-aggregated slice
-  sums, joined chunk-to-chunk; only unequal chunks survive.
+  sums, joined chunk-to-chunk; the join (at most n_chunks rows) is
+  the one collect, and its unequal chunks drive the drilldown.
 - J3 column seek    -> one pass computing per-column slice sums for
   every column simultaneously (no per-column rescans like the
   reference's drill-down loop needed — columnar scan amortizes it).
@@ -20,7 +21,8 @@ data_compare_seek.go:49-430) as declarative Spark plans:
 Scale notes: a full-row multiset diff shuffles both tables once on the
 md5 of the canonical row (32-byte keys, not wide rows) when
 ``hash_rows=True``; chunk compare shuffles only (chunk_id -> 5 numbers)
-per side. Nothing here collects more than mismatch rows to the driver.
+per side.  The driver collects per-chunk sums (bounded by the chunk
+plan) and mismatch rows, never table rows.
 """
 
 from __future__ import annotations
@@ -342,63 +344,25 @@ def chunked_checksum_crc32(
 
 def diff_chunk_sums(src_sums: DataFrame, dst_sums: DataFrame) -> DataFrame:
     """The chunk-sum comparison every chunked verify shares: one
-    full-outer join on ``chunk_id`` keeping the chunks where any sum
-    column differs, null-safely (a chunk present on one side only
-    differs).  The sum columns are whatever the inputs carry besides
-    ``chunk_id`` — ``cnt, h0..h3`` (MD5) or ``cnt, crc_sum`` (CRC32) —
-    so one comparison serves both methods.  Output: ``chunk_id,
-    src_cnt, dst_cnt`` (a side missing the chunk counts 0)."""
+    full-outer join on ``chunk_id``.  The sum columns are whatever the
+    inputs carry besides ``chunk_id`` — ``cnt`` (ROWS), ``cnt, h0..h3``
+    (MD5) or ``cnt, crc_sum`` (CRC32) — so one comparison serves every
+    method.  Output: ``chunk_id, src_cnt, dst_cnt, same``, one row per
+    chunk on either side; ``same`` is true when every sum column is
+    null-safe equal (a chunk present on one side only differs, and
+    its missing side counts 0).  Callers filter on ``same``."""
     sums = [c for c in src_sums.columns if c != "chunk_id"]
     sa = src_sums.select("chunk_id", *[F.col(c).alias(f"src_{c}") for c in sums])
     sb = dst_sums.select("chunk_id", *[F.col(c).alias(f"dst_{c}") for c in sums])
     same = F.lit(True)
     for c in sums:
         same = same & F.col(f"src_{c}").eqNullSafe(F.col(f"dst_{c}"))
-    return (
-        sa.join(sb, "chunk_id", "full_outer")
-        .filter(~same)
-        .select(
-            "chunk_id",
-            F.coalesce("src_cnt", F.lit(0)).alias("src_cnt"),
-            F.coalesce("dst_cnt", F.lit(0)).alias("dst_cnt"),
-        )
+    return sa.join(sb, "chunk_id", "full_outer").select(
+        "chunk_id",
+        F.coalesce("src_cnt", F.lit(0)).alias("src_cnt"),
+        F.coalesce("dst_cnt", F.lit(0)).alias("dst_cnt"),
+        same.alias("same"),
     )
-
-
-def compare_chunked_crc32(
-    src: DataFrame,
-    dst: DataFrame,
-    src_chunk_id: Column,
-    dst_chunk_id: Column,
-    cols: list[str] | None = None,
-    oracle_empty_is_null: bool = False,
-) -> DataFrame:
-    """J2 on the CRC32 path: join per-chunk CRC32 sums, keep unequal
-    chunks.  Same output contract as :func:`compare_chunked`."""
-    cols = cols or src.columns
-    return diff_chunk_sums(
-        chunked_checksum_crc32(src, src_chunk_id, cols, oracle_empty_is_null),
-        chunked_checksum_crc32(dst, dst_chunk_id, cols, oracle_empty_is_null))
-
-
-def compare_chunked(
-    src: DataFrame,
-    dst: DataFrame,
-    src_chunk_id: Column,
-    dst_chunk_id: Column,
-    cols: list[str] | None = None,
-    oracle_empty_is_null: bool = False,
-) -> DataFrame:
-    """J2: join per-chunk checksums of both sides, keep unequal chunks.
-
-    Output: chunk_id, src_cnt, dst_cnt — one row per chunk that
-    differs (missing chunk on a side => counts 0).  Drill-down (J3 /
-    row fetch) then touches only these chunks.
-    """
-    cols = cols or src.columns
-    return diff_chunk_sums(
-        chunked_checksum(src, src_chunk_id, cols, oracle_empty_is_null),
-        chunked_checksum(dst, dst_chunk_id, cols, oracle_empty_is_null))
 
 
 def seek_columns(
@@ -457,30 +421,29 @@ def compare_table(
     oracle_empty_is_null: bool = False,
     method: str = "MD5_SLICES",
 ) -> CompareReport:
-    """End-to-end table compare: chunked when a plan is given, whole
-    table otherwise.  ``method`` is a ladder value from
-    :func:`compare_method_for` ('MD5_SLICES', 'CRC32_SLICES',
-    'HASH_PROGRAM' — the md5 client-side path — or 'ROWS' for
-    count-only).  Driver-side result is O(n_chunks)."""
+    """End-to-end table compare (J2 with A1/A2): per-chunk sums of
+    both sides, joined by :func:`diff_chunk_sums` and collected in ONE
+    action.  ``method`` is a ladder value from
+    :func:`compare_method_for`: 'ROWS' sums ``cnt`` only (the
+    per-chunk COUNT), 'CRC32_SLICES' ``cnt, crc_sum``, and
+    'MD5_SLICES' / 'HASH_PROGRAM' ``cnt, h0..h3``.  The chunk id comes
+    from ``plan``; with no plan the whole table is chunk 0, so a
+    mismatch reports ``[0]``.  Row counts are the sums of the
+    per-chunk counts.  Driver-side result: at most ``n_chunks`` rows,
+    a bound the plan already imposes."""
     cols = cols or src.columns
-    if method == "ROWS":
-        src_cnt, dst_cnt = _both_counts(src, dst)
-        eq = src_cnt == dst_cnt
-        return CompareReport(eq, src_cnt, dst_cnt, [] if eq else [0])
-    crc = method == "CRC32_SLICES"
-    if plan is None:
-        check = C.table_checksum_crc32 if crc else C.table_checksum
-        keys = ["cnt", "crc_sum"] if crc else ["cnt", "h0", "h1", "h2", "h3"]
-        a, b = _collect_sides(check(src, cols, oracle_empty_is_null),
-                              check(dst, cols, oracle_empty_is_null))
-        eq = all(a[k] == b[k] for k in keys)
-        return CompareReport(eq, a["cnt"], b["cnt"], [] if eq else [0])
-    chunked = compare_chunked_crc32 if crc else compare_chunked
-    bad = chunked(
-        src, dst, assign_chunk_id(plan, src), assign_chunk_id(plan, dst), cols, oracle_empty_is_null
-    ).collect()
-    src_cnt, dst_cnt = _both_counts(src, dst)
-    return CompareReport(len(bad) == 0, src_cnt, dst_cnt, sorted(r["chunk_id"] for r in bad))
+
+    def sums(df: DataFrame) -> DataFrame:
+        cid = assign_chunk_id(plan, df) if plan is not None else F.lit(0)
+        if method == "ROWS":
+            return df.groupBy(cid.alias("chunk_id")).agg(F.count(F.lit(1)).alias("cnt"))
+        check = chunked_checksum_crc32 if method == "CRC32_SLICES" else chunked_checksum
+        return check(df, cid, cols, oracle_empty_is_null)
+
+    rows = diff_chunk_sums(sums(src), sums(dst)).collect()
+    bad = sorted(r["chunk_id"] for r in rows if not r["same"])
+    return CompareReport(not bad, sum(r["src_cnt"] for r in rows),
+                         sum(r["dst_cnt"] for r in rows), bad)
 
 
 def _collect_sides(s_agg: DataFrame, d_agg: DataFrame):
@@ -492,13 +455,6 @@ def _collect_sides(s_agg: DataFrame, d_agg: DataFrame):
         .unionByName(d_agg.withColumn("__side", F.lit("d")))
         .collect())}
     return both["s"], both["d"]
-
-
-def _both_counts(src: DataFrame, dst: DataFrame) -> tuple[int, int]:
-    """Both sides' row counts in ONE Spark job (unioned one-row aggs)."""
-    s, d = _collect_sides(src.agg(F.count(F.lit(1)).alias("cnt")),
-                          dst.agg(F.count(F.lit(1)).alias("cnt")))
-    return s["cnt"], d["cnt"]
 
 
 def in_chunks(df: DataFrame, ids: list[int], col: str = "chunk_id") -> DataFrame:

@@ -7,23 +7,28 @@ INTO database/processor/processor_translate_mysql.go:40,81; chunk
 ledger rows model/task/task_entity.go:196) collapses into Spark's own
 execution: a declarative read plan feeding a writer.  What remains to
 build is (a) sink option mapping, (b) safe-mode upsert semantics for
-non-transactional targets, (c) a slim append-only chunk ledger so
-batch jobs resume like the reference's checkpoint-enabled tasks.
+non-transactional targets, (c) a chunk ledger so batch jobs resume
+like the reference's checkpoint-enabled tasks.
 
 Scale notes: writers inherit the read's partitioning — ``repartition``
 only when the target layout demands it; CSV/parquet writes stream
-per-partition with no driver involvement; the ledger is O(chunks).
+per-partition with no driver involvement.  Per-chunk bookkeeping is
+driver data, like the reference's coordinator rows: the ledger is an
+O(chunks) journal file, and a chunk's row count rides an
+``observe()`` on its own write, so a chunk costs one Spark job.
 """
 
 from __future__ import annotations
 
+import datetime
+import json
 import os
 import shutil
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from dbms_spark.plans.parallelism import literal_df
+from dbms_spark.streaming.cdc import write_durably
 
 
 @dataclass
@@ -149,45 +154,61 @@ def upsert(existing: DataFrame, incoming: DataFrame, keys: list[str]) -> DataFra
 
 @dataclass
 class ChunkLedger:
-    """Append-only parquet ledger of per-chunk progress (the Spark
-    replacement for the reference's metadata-DB chunk rows; kept
-    append-only so concurrent writers can't corrupt it — status is
-    resolved as 'latest event per chunk')."""
+    """Per-chunk progress of one migrate task as a driver-side journal
+    (the reference keeps these as chunk rows in its meta DB,
+    model/task/task_entity.go:196).  Each event is one JSON line,
+    appended and fsynced; the status of a chunk is its latest line.
+    A crash mid-append can leave a torn last line: it is skipped on
+    read, so its chunk stays pending, and every append starts on a
+    fresh line, so a torn line never swallows the next event.  Several
+    tasks may share one journal file."""
 
-    spark: SparkSession
     path: str
     task: str
-    _schema: str = field(
-        default="task string, chunk_id int, predicate string, status string, rows long, ts timestamp",
-        repr=False,
-    )
 
     def log(self, chunk_id: int, predicate: str, status: str, rows: int = 0) -> None:
-        import datetime
+        os.makedirs(os.path.dirname(os.path.abspath(self.path)), exist_ok=True)
+        event = {"task": self.task, "chunk_id": chunk_id, "predicate": predicate,
+                 "status": status, "rows": rows,
+                 "ts": datetime.datetime.now(datetime.timezone.utc).isoformat()}
+        write_durably(self.path, "\n" + json.dumps(event), "a")
 
-        row = [(self.task, chunk_id, predicate, status, rows,
-                datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None))]
-        literal_df(self.spark, row, self._schema).write.mode("append").parquet(self.path)
-
-    def state(self) -> DataFrame:
-        """Latest status per chunk (event-sourced resolve)."""
-        from pyspark.sql import Window
-
-        df = self.spark.read.parquet(self.path).filter(F.col("task") == self.task)
-        w = Window.partitionBy("chunk_id").orderBy(F.desc("ts"))
-        return (
-            df.withColumn("rn", F.row_number().over(w)).filter("rn = 1").drop("rn")
-        )
+    def state(self) -> dict[int, dict]:
+        """chunk id -> latest event of this task."""
+        latest: dict[int, dict] = {}
+        if not os.path.exists(self.path):
+            return latest
+        with open(self.path) as f:
+            for line in f:
+                try:
+                    event = json.loads(line)
+                except ValueError:      # blank, or torn by a crashed append
+                    continue
+                if event["task"] == self.task:
+                    latest[event["chunk_id"]] = event
+        return latest
 
     def pending(self, all_chunk_ids: list[int]) -> list[int]:
-        if not os.path.exists(self.path):
-            return list(all_chunk_ids)
-        done = {r["chunk_id"] for r in self.state().filter("status = 'done'").collect()}
-        return [c for c in all_chunk_ids if c not in done]
+        state = self.state()
+        return [c for c in all_chunk_ids if state.get(c, {}).get("status") != "done"]
+
+
+def write_counted(df: DataFrame, path: str, fmt: str = "parquet") -> int:
+    """Write ``df`` to ``path`` as parquet or CSV and return its row
+    count from an ``observe()`` on the write itself: one Spark job, no
+    read-back or second scan."""
+    if fmt not in ("parquet", "csv"):
+        raise ValueError(f"unknown sink format {fmt}")
+    obs = Observation()
+    counted = df.observe(obs, F.count(F.lit(1)).alias("n"))
+    if fmt == "parquet":
+        write_parquet(counted, path)
+    else:
+        write_csv(counted, path)
+    return obs.get["n"]
 
 
 def migrate_chunked(
-    spark: SparkSession,
     src: DataFrame,
     predicates: list[str],
     sink_path: str,
@@ -196,24 +217,17 @@ def migrate_chunked(
 ) -> int:
     """Resumable chunked migrate: each chunk predicate becomes one
     filtered write into a chunk-keyed subdirectory; completed chunks
-    are skipped on re-run.  (With a JDBC source the same predicates
-    feed ``spark.read.jdbc(predicates=...)`` so each chunk is one
-    remote range scan — S1/S2.)"""
+    are skipped on re-run.  Returns the rows written by this call.
+    (With a JDBC source the same predicates feed
+    ``spark.read.jdbc(predicates=...)`` so each chunk is one remote
+    range scan — S1/S2.)"""
     todo = range(len(predicates)) if ledger is None else ledger.pending(list(range(len(predicates))))
     migrated = 0
     for i in todo:
         pred = predicates[i]
         if ledger:
             ledger.log(i, pred, "running")
-        part = src.filter(pred)
-        out = os.path.join(sink_path, f"chunk={i}")
-        if fmt == "parquet":
-            part.write.mode("overwrite").parquet(out)
-        elif fmt == "csv":
-            write_csv(part, out)
-        else:
-            raise ValueError(f"unknown sink format {fmt}")
-        n = spark.read.format(fmt).load(out).count() if fmt == "parquet" else part.count()
+        n = write_counted(src.filter(pred), os.path.join(sink_path, f"chunk={i}"), fmt)
         if ledger:
             ledger.log(i, pred, "done", n)
         migrated += n
@@ -399,10 +413,7 @@ def _write_live_manifest(path: str, live_files: list[str],
     tmp = manifest + ".tmp"
     lines = sorted(os.path.basename(p) for p in live_files)
     lines += sorted("!" + os.path.basename(p) for p in removed_files)
-    with open(tmp, "w") as f:
-        f.write("\n".join(lines))
-        f.flush()
-        os.fsync(f.fileno())
+    write_durably(tmp, "\n".join(lines))
     os.rename(tmp, manifest)
 
 

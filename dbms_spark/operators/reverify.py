@@ -72,7 +72,7 @@ def changed_chunks(src_sums: DataFrame, ledger: DataFrame | None) -> DataFrame:
     of them when there is no ledger yet)."""
     if ledger is None:
         return src_sums.select("chunk_id")
-    return diff_chunk_sums(src_sums, ledger).select("chunk_id")
+    return diff_chunk_sums(src_sums, ledger).filter(~F.col("same")).select("chunk_id")
 
 
 @dataclass(frozen=True)
@@ -134,6 +134,7 @@ def reverify(
     dst_sub = dst.filter(F.expr(ranges_predicate(plan, ids, max_ranges)))
     dst_sums = chunked_checksum(
         dst_sub, assign_chunk_id(plan, dst_sub), cols, oracle_empty_is_null)
-    bad = _ids(diff_chunk_sums(in_chunks(src_sums, ids), in_chunks(dst_sums, ids)))
+    bad = _ids(diff_chunk_sums(in_chunks(src_sums, ids), in_chunks(dst_sums, ids))
+               .filter(~F.col("same")))
     return src_sums, ReverifyReport(
         ids, bad, plan.n_chunks, _cap_runs(_runs(ids), max_ranges))

@@ -30,6 +30,7 @@ assignment is a map-side expression (no shuffle, no join).
 from __future__ import annotations
 
 import datetime
+import math
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Window
@@ -135,6 +136,10 @@ def sql_literal(v, dialect: str = "mysql") -> str:
         return f"DATE '{v.isoformat()}'"
     if isinstance(v, bool):
         return "TRUE" if v else "FALSE"
+    if dialect == "spark" and isinstance(v, float) and not math.isfinite(v):
+        # str() gives nan / inf / -inf, which Spark parses as column names
+        word = "NaN" if math.isnan(v) else ("Infinity" if v > 0 else "-Infinity")
+        return f"CAST('{word}' AS DOUBLE)"
     return str(v)
 
 
@@ -333,11 +338,11 @@ def ranges_predicate(plan: ChunkPlan, ids: list[int],
 
 
 #: bound count above which assignment switches from the additive
-#: when-chain (nests O(n) deep — the Catalyst converter StackOverflows
+#: CASE chain (nests O(n) deep — the Catalyst converter StackOverflows
 #: around ~1,000 bounds) to the unrolled binary search (flat plan,
-#: O(log n) comparisons per row).  Below it the chain is kept: it's
-#: what every existing pinned plan prints, and at single-digit chunk
-#: counts it codegens marginally tighter.
+#: O(log n) comparisons per row).  Below it the chain is kept: on
+#: small plans it runs faster per row than the search's higher-order
+#: loop (crossover in docs/SCALE.md, "Chunk bookkeeping on the driver").
 _BINARY_SEARCH_THRESHOLD = 128
 
 
@@ -345,58 +350,49 @@ def assign_chunk_id(plan: ChunkPlan, df: DataFrame) -> Column:
     """Map-side chunk id expression: count of boundaries strictly below
     the row's key tuple (lexicographic struct comparison, no shuffle).
 
-    Two equivalent forms by bound count: an additive when-chain for
-    small plans, and — past :data:`_BINARY_SEARCH_THRESHOLD` — a
-    lower-bound binary search unrolled via ``aggregate`` over a
-    ceil(log2(n+1))-step sequence against ONE flat array-of-structs
-    literal.  The chain nests an expression per bound and overflows
-    the converter stack near 1,000 bounds; the search keeps the plan
-    flat (one n-child array constructor) and does O(log n) struct
-    comparisons per row, so reference-style 500-row chunks at scale
-    (10^4-10^6 bounds) assign without plan blowup.  NULL keys land in
-    chunk 0 in both forms (a NULL comparison coalesces to
-    'not greater')."""
+    The key struct and every bound are rendered as SQL text once and
+    parsed once: building them as Columns cost a py4j round trip per
+    field per bound.  CASTs pin each bound field to the column's exact
+    type (TIMESTAMP_NTZ vs TIMESTAMP, INT vs BIGINT), or the struct
+    comparison fails analysis.  Two equivalent forms by bound count:
+    an additive CASE chain for small plans, and — past
+    :data:`_BINARY_SEARCH_THRESHOLD` — a lower-bound binary search
+    unrolled via ``aggregate`` over a ceil(log2(n+1))-step sequence
+    against ONE flat array-of-structs literal.  The chain nests an
+    expression per bound and overflows the converter stack near 1,000
+    bounds; the search keeps the plan flat (one n-child array
+    constructor) and does O(log n) struct comparisons per row, so
+    reference-style 500-row chunks at scale (10^4-10^6 bounds) assign
+    without plan blowup.  NULL keys land in chunk 0 in both forms (a
+    NULL comparison counts as 'not greater')."""
     if plan.n_chunks == 1:
         return F.lit(0)
-    fields = {f.name: f.dataType for f in df.schema.fields}
-    key = F.struct(*[
-        _collated(F.col(c), fields[c], plan.collation) for c in plan.key_cols
-    ])
+    from pyspark.sql import types as T
 
-    def blit(b: tuple) -> Column:
-        # literals must match the column types exactly (TIMESTAMP_NTZ vs
-        # TIMESTAMP, INT vs BIGINT) or struct comparison fails analysis
-        return F.struct(*[
-            _collated(F.lit(v).cast(fields[c]), fields[c], plan.collation)
-            for c, v in zip(plan.key_cols, b)
-        ])
+    fields = {f.name: f.dataType for f in df.schema.fields}
+
+    def collated(e: str, c: str) -> str:
+        if plan.collation and isinstance(fields[c], T.StringType):
+            return f"collate({e}, '{plan.collation}')"
+        return e
+
+    def struct(exprs: list[str]) -> str:
+        return "named_struct(" + ", ".join(
+            f"'{c}', {collated(e, c)}" for c, e in zip(plan.key_cols, exprs)) + ")"
+
+    key = struct([_quote(c, "spark") for c in plan.key_cols])
+
+    def bound(b: tuple) -> str:
+        return struct([f"CAST({sql_literal(v, 'spark')} AS {fields[c].simpleString()})"
+                       for c, v in zip(plan.key_cols, b)])
 
     n = len(plan.bounds)
     if n <= _BINARY_SEARCH_THRESHOLD:
-        cid: Column = F.lit(0)
-        for b in plan.bounds:
-            cid = cid + F.when(key > blit(b), 1).otherwise(0)
-        return cid
+        return F.expr(" + ".join(
+            f"CASE WHEN {key} > {bound(b)} THEN 1 ELSE 0 END" for b in plan.bounds))
 
-    import math
-
-    from pyspark.sql import types as T
-
-    # ONE parsed SQL expression for the whole boundary array: building
-    # n struct Columns through py4j costs a JVM round trip per bound
-    # (~35 s at 10^4 bounds); rendering the literal text and parsing
-    # once is ~constant.  CASTs pin each field to the column's exact
-    # type so the struct comparison analyzes, same as blit().
-    def _elem(b: tuple) -> str:
-        parts = []
-        for c, v in zip(plan.key_cols, b):
-            e = f"CAST({sql_literal(v, 'spark')} AS {fields[c].simpleString()})"
-            if plan.collation and isinstance(fields[c], T.StringType):
-                e = f"collate({e}, '{plan.collation}')"
-            parts.append(f"'{c}', {e}")
-        return "named_struct(" + ", ".join(parts) + ")"
-
-    bounds = F.expr("array(" + ", ".join(_elem(b) for b in plan.bounds) + ")")
+    bounds = F.expr("array(" + ", ".join(bound(b) for b in plan.bounds) + ")")
+    key_col = F.expr(key)
     depth = math.ceil(math.log2(n + 1))
     init = F.struct(F.lit(0).alias("lo"), F.lit(n).alias("hi"))
 
@@ -404,8 +400,8 @@ def assign_chunk_id(plan: ChunkPlan, df: DataFrame) -> Column:
         lo, hi = acc["lo"], acc["hi"]
         mid = F.floor((lo + hi) / 2).cast("int")
         # strictly-greater, NULL -> false: matches the chain's
-        # when(key > lit, 1).otherwise(0) per-bound semantics
-        gt = F.coalesce(key > F.element_at(bounds, mid + 1), F.lit(False))
+        # CASE WHEN key > bound THEN 1 ELSE 0 per-bound semantics
+        gt = F.coalesce(key_col > F.element_at(bounds, mid + 1), F.lit(False))
         return F.when(
             lo < hi,
             F.when(gt, F.struct((mid + 1).alias("lo"), hi.alias("hi")))

@@ -348,9 +348,14 @@ def parse_typed(df: DataFrame, col: str, types: dict[str, str]) -> DataFrame:
     )
 
 
-def _write_json_durably(path: str, obj: dict) -> None:
-    with open(path, "w") as f:
-        json.dump(obj, f)
+def write_durably(path: str, text: str, mode: str = "w") -> None:
+    """Write (``"w"``) or append (``"a"``) ``text`` and fsync it before
+    returning.  Replace-writers call it on a temp file and then do
+    their own ``os.replace``/``os.rename``: the fsync must land before
+    the rename, or a power loss can keep the rename but not the
+    content."""
+    with open(path, mode) as f:
+        f.write(text)
         f.flush()
         os.fsync(f.fileno())
 
@@ -365,9 +370,9 @@ def commit_manifest(root: str, manifest: dict) -> None:
     wedges every later read of the store."""
     hdir = os.path.join(root, "manifests")
     os.makedirs(hdir, exist_ok=True)
-    _write_json_durably(os.path.join(hdir, f"v{manifest['version']}.json"), manifest)
+    write_durably(os.path.join(hdir, f"v{manifest['version']}.json"), json.dumps(manifest))
     current = os.path.join(root, "manifest.json")
-    _write_json_durably(current + ".tmp", manifest)
+    write_durably(current + ".tmp", json.dumps(manifest))
     os.replace(current + ".tmp", current)  # atomic on POSIX
 
 

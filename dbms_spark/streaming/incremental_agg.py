@@ -28,6 +28,7 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from dbms_spark.plans.parallelism import literal_df
+from dbms_spark.streaming.cdc import write_durably
 
 
 def _image(events: DataFrame, col: str, types: dict[str, str], sign: int,
@@ -173,10 +174,7 @@ class AggStore:
             for f in legacy:
                 os.rename(os.path.join(self.path, f), os.path.join(mig_dir, f))
         staged = os.path.join(self.path, self._POINTER + ".staging")
-        with open(staged, "w") as f:
-            f.write(f"v_000000 {bid}")
-            f.flush()
-            os.fsync(f.fileno())
+        write_durably(staged, f"v_000000 {bid}")
         os.rename(staged, os.path.join(self.path, self._POINTER))
         if os.path.isdir(mig_dir):
             _merge_dir(mig_dir, snap_dir)
@@ -229,10 +227,7 @@ class AggStore:
         # it must be fully materialized before the pointer moves
         new.write.mode("overwrite").parquet(os.path.join(self.path, snap))
         staged = os.path.join(self.path, self._POINTER + ".staging")
-        with open(staged, "w") as f:
-            f.write(f"{snap} {bid}")
-            f.flush()
-            os.fsync(f.fileno())
+        write_durably(staged, f"{snap} {bid}")
         os.rename(staged, os.path.join(self.path, self._POINTER))  # atomic commit
         # sweep snapshots the pointer no longer names (orphans from
         # interrupted commits, plus the just-superseded snapshot)

@@ -266,44 +266,80 @@ def test_apply_prunes_untouched_buckets(store, spark):
     assert on_disk == referenced
 
 
-@pytest.mark.parametrize("kind", ["table_store", "ann_store"])
+@pytest.mark.parametrize(
+    "kind", ["table_store", "ann_store", "agg_pointer", "agg_legacy_pointer", "live_manifest"])
 def test_manifest_commit_fsyncs_before_replace(spark, tmp_path, monkeypatch, kind):
-    """Durability, shown by call order: the history entry and the temp
-    manifest are both fsynced BEFORE the replace publishes the new
-    pointer — else a power loss can keep the rename but not the
-    content, and an empty manifest.json wedges every later apply."""
+    """Durability, shown by call order: what a commit publishes (and a
+    store manifest's history entry) is fsynced BEFORE the replace or
+    rename publishes it — else a power loss can keep the rename but
+    not the content, and an empty manifest or pointer wedges every
+    later read.  Covers every replace-writer: the table and ANN store
+    manifests, the AggStore pointer (commit and legacy-layout
+    migration) and the compaction ``_LIVE_MANIFEST``."""
     from dbms_spark.llm.ann_store import AnnIndexStore
+    from dbms_spark.operators import migrate
+    from dbms_spark.streaming import incremental_agg as IA
 
-    if kind == "table_store":
-        store = cdc.ParquetTableStore(spark, str(tmp_path), {"t1": "id bigint"},
-                                      {"t1": ["id"]})
-        root = store.table_path("t1")
+    if kind in ("table_store", "ann_store"):
+        if kind == "table_store":
+            store = cdc.ParquetTableStore(spark, str(tmp_path), {"t1": "id bigint"},
+                                          {"t1": ["id"]})
+            root = store.table_path("t1")
 
-        def commit(m):
-            store._commit_manifest("t1", m)
+            def commit():
+                store._commit_manifest("t1", {"version": 3, "watermark": 7})
+        else:
+            ann = AnnIndexStore(spark, str(tmp_path / "ix"))
+            root = ann.path
+
+            def commit():
+                ann._commit_manifest({"version": 3, "watermark": 7})
+        published = os.path.join(root, "manifest.json")
+        durable = [os.path.join(root, "manifests", "v3.json"), published]
+    elif kind.startswith("agg"):
+        agg = IA.AggStore(spark, str(tmp_path / "agg"), ["region"], ["amount"],
+                          {"region": "string", "amount": "bigint"})
+        if kind == "agg_pointer":
+            def commit():
+                agg._commit(spark.range(1), None, 0)
+        else:   # a pre-pointer store: parquet under the path + a batch marker
+            spark.range(3).write.parquet(agg.path)
+            with open(agg.path + ".applied_batch", "w") as f:
+                f.write("4")
+
+            def commit():
+                assert agg._pointer() == ("v_000000", 4)
+        published = os.path.join(agg.path, IA.AggStore._POINTER)
+        durable = [published]
     else:
-        ann = AnnIndexStore(spark, str(tmp_path / "ix"))
-        root, commit = ann.path, ann._commit_manifest
+        live = tmp_path / "live"
+        live.mkdir()
+
+        def commit():
+            migrate._write_live_manifest(str(live), [str(live / "part-0.parquet")])
+        published = str(live / "_LIVE_MANIFEST")
+        durable = [published]
     events = []
-    real_fsync, real_replace = os.fsync, os.replace
+    real_fsync, real_replace, real_rename = os.fsync, os.replace, os.rename
 
     def fsync(fd):
         events.append(("fsync", os.fstat(fd).st_ino))
         return real_fsync(fd)
 
-    def replace(src, dst):
-        events.append(("replace", os.stat(src).st_ino))
-        return real_replace(src, dst)
+    def publish(real):
+        def inner(src, dst):
+            events.append(("publish", os.stat(src).st_ino))
+            return real(src, dst)
+        return inner
 
     monkeypatch.setattr(os, "fsync", fsync)
-    monkeypatch.setattr(os, "replace", replace)
-    commit({"version": 3, "watermark": 7})
+    monkeypatch.setattr(os, "replace", publish(real_replace))
+    monkeypatch.setattr(os, "rename", publish(real_rename))
+    commit()
     monkeypatch.undo()
-    hist = os.stat(os.path.join(root, "manifests", "v3.json")).st_ino
-    current = os.stat(os.path.join(root, "manifest.json")).st_ino
-    published = events.index(("replace", current))
-    synced = {ino for op, ino in events[:published] if op == "fsync"}
-    assert {hist, current} <= synced, events
+    at = events.index(("publish", os.stat(published).st_ino))
+    synced = {ino for op, ino in events[:at] if op == "fsync"}
+    assert {os.stat(p).st_ino for p in durable} <= synced, events
 
 
 def test_apply_crash_leaves_consistent_snapshot(store, spark, monkeypatch):

@@ -215,6 +215,17 @@ def test_assign_chunk_id_binary_search_equivalence(spark, monkeypatch):
     esc_got = both_on(esc_df, C.ChunkPlan(("k2",), esc_bounds))
     assert len(set(esc_got.values())) == len(esc_bounds) + 1  # all chunks hit
 
+    # non-finite double bounds must render as values (a bare nan or
+    # inf parses as a column name).  Spark orders -Infinity < finite <
+    # Infinity < NaN, and NaN equals NaN.
+    inf, nan = float("inf"), float("nan")
+    fvals = [-inf, -1.5, 0.0, 2.25, inf, nan, None]
+    f_df = spark.createDataFrame([(v, i) for i, v in enumerate(fvals * 20)],
+                                 "k double, rid long")
+    f_got = both_on(f_df, C.ChunkPlan(("k",), ((-inf,), (0.0,), (inf,), (nan,))))
+    by_val = {rid % len(fvals): cid for rid, cid in f_got.items()}
+    assert [by_val[i] for i in range(len(fvals))] == [0, 1, 1, 2, 2, 3, 0]
+
     # all-NULL-key rows land in chunk 0 in both forms
     nulls = spark.createDataFrame([(None, None, 1)], "k1 int, k2 string, rid long")
     monkeypatch.setattr(C, "_BINARY_SEARCH_THRESHOLD", 0)

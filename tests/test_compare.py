@@ -60,11 +60,11 @@ def test_hashed_diff_agrees_with_plain(orders, mutated):
 
 def test_chunk_compare_localizes(orders, mutated):
     plan = chunker.plan_chunks(orders, ["o_orderkey"], 10)
-    bad = X.compare_chunked(
-        orders, mutated, chunker.assign_chunk_id(plan, orders), chunker.assign_chunk_id(plan, mutated)
-    )
-    bad_ids = {r["chunk_id"] for r in bad.collect()}
+    rep = X.compare_table(orders, mutated, plan=plan, method="MD5_SLICES")
+    bad_ids = set(rep.mismatched_chunks)
     assert bad_ids, "mutations must be detected"
+    assert not rep.equal
+    assert (rep.src_cnt, rep.dst_cnt) == (orders.count(), mutated.count())
     # every chunk containing a mutated key must be flagged
     mutated_keys = orders.filter(
         "o_orderkey % 53 = 0 OR o_orderkey % 41 = 0 OR o_orderkey % 97 = 0"
@@ -111,7 +111,7 @@ def test_crc32_golden_reference_semantics(spark):
     # independently recompute the canonical strings the kernel hashes
     canon = [r[0] for r in df.select(C.canonical_row(df).alias("c")).collect()]
     expected = sum(binascii.crc32(c.encode("utf-8")) for c in canon)
-    got = C.table_checksum_crc32(df).collect()[0]
+    got = X.chunked_checksum_crc32(df, F.lit(0)).collect()[0]
     assert got["cnt"] == 4
     assert int(got["crc_sum"]) == expected
     # per-row agreement too (order by id for determinism)
@@ -122,20 +122,38 @@ def test_crc32_golden_reference_semantics(spark):
 
 def test_crc32_chunked_compare_localizes(orders, mutated):
     plan = chunker.plan_chunks(orders, ["o_orderkey"], 10)
-    bad = X.compare_chunked_crc32(
-        orders, mutated, chunker.assign_chunk_id(plan, orders), chunker.assign_chunk_id(plan, mutated)
-    )
-    bad_ids = {r["chunk_id"] for r in bad.collect()}
     mutated_keys = orders.filter(
         "o_orderkey % 53 = 0 OR o_orderkey % 41 = 0 OR o_orderkey % 97 = 0"
     ).withColumn("cid", chunker.assign_chunk_id(plan, orders))
     expect = {r["cid"] for r in mutated_keys.select("cid").distinct().collect()}
-    assert bad_ids == expect
-    # end-to-end routing through the ladder value
     rep = X.compare_table(orders, orders, plan=plan, method="CRC32_SLICES")
     assert rep.equal and rep.mismatched_chunks == []
     rep2 = X.compare_table(orders, mutated, plan=plan, method="CRC32_SLICES")
     assert not rep2.equal and rep2.mismatched_chunks == sorted(expect)
+
+
+def test_rows_method_reports_per_chunk_count_mismatches(orders, mutated):
+    """ROWS compares per-chunk COUNTs: with a plan it reports exactly
+    the chunks whose row counts differ (a value-only change is
+    invisible to it); with no plan the whole table is chunk 0."""
+    plan = chunker.plan_chunks(orders, ["o_orderkey"], 10)
+
+    def counts(df):
+        return {r["cid"]: r["n"] for r in df.groupBy(
+            chunker.assign_chunk_id(plan, df).alias("cid")).agg(
+            F.count(F.lit(1)).alias("n")).collect()}
+
+    a, b = counts(orders), counts(mutated)
+    expect = sorted(c for c in set(a) | set(b) if a.get(c, 0) != b.get(c, 0))
+    assert expect, "fixture must change some chunk's row count"
+    rep = X.compare_table(orders, mutated, plan=plan, method="ROWS")
+    assert rep.mismatched_chunks == expect and not rep.equal
+    assert (rep.src_cnt, rep.dst_cnt) == (sum(a.values()), sum(b.values()))
+    bumped = orders.withColumn("o_totalprice", F.col("o_totalprice") + 1.0)
+    assert X.compare_table(orders, bumped, plan=plan, method="ROWS").equal
+    whole = X.compare_table(orders, orders.filter("o_orderkey % 53 != 0"), method="ROWS")
+    assert not whole.equal and whole.mismatched_chunks == [0]
+    assert X.compare_table(orders, bumped, method="ROWS").mismatched_chunks == []
 
 
 def test_gen_fix_sql(orders, mutated, spark):
@@ -217,9 +235,7 @@ def test_multiset_diff_collated(spark):
 
 def test_drilldown_chunks_prunes_and_localizes(orders, mutated, spark):
     plan = chunker.plan_chunks(orders, ["o_orderkey"], 10)
-    bad = sorted(r["chunk_id"] for r in X.compare_chunked(
-        orders, mutated, chunker.assign_chunk_id(plan, orders),
-        chunker.assign_chunk_id(plan, mutated)).collect())
+    bad = X.compare_table(orders, mutated, plan=plan).mismatched_chunks
     drill = X.drilldown_chunks(orders, mutated, plan, bad)
     full = X.multiset_diff(orders, mutated)
     # chunk-restricted drilldown finds exactly the full diff (every
@@ -316,11 +332,7 @@ def test_drilldown_capped_ranges_exact(orders, mutated, spark):
         "o_totalprice",
         F.when(F.col("o_orderkey") == gap_key, F.col("o_totalprice") + 9)
         .otherwise(F.col("o_totalprice")))
-    bad = sorted(r["chunk_id"] for r in
-                 X.compare_chunked(orders, mutated,
-                                   chunker.assign_chunk_id(plan, orders),
-                                   chunker.assign_chunk_id(plan, mutated),
-                                   orders.columns).collect())
+    bad = X.compare_table(orders, mutated, plan=plan).mismatched_chunks
     assert bad, "fixture must produce mismatched chunks"
     want = {tuple(r) for r in X.drilldown_chunks(orders, dst, plan, bad).collect()}
     got = {tuple(r) for r in

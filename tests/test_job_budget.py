@@ -23,10 +23,14 @@ JOB_BUDGET = {
     # rides its observe) + 2 for the pinned dedup and its observed
     # probe + the broadcast of the batch keys + the clustered write
     "apply_cdc_batch": 7,
-    # clean 10-chunk verify: the chunk-sum diff collect (both sides'
-    # parallelism guards and sum exchanges) + both row counts in one
-    # unioned collect
-    "data_verify": 8,
+    # 4-chunk migrate with a ledger: plan_chunks (its row count and
+    # the sampled ntile collect) + one observed write per chunk; the
+    # ledger is a driver-side journal and runs no job
+    "data_migrate": 8,
+    # clean 10-chunk verify: ONE collect of the chunk-sum join (both
+    # sides' parallelism guards and sum exchanges); the row counts are
+    # the sums of the per-chunk counts
+    "data_verify": 5,
     # changed-id collect (source sums persisted, ledger diff: 5) + the
     # mismatched-id collect (range-pruned target sums and one
     # broadcast of the id list: 4), the report reads included
@@ -121,6 +125,15 @@ def test_data_verify_job_budget(spark, verify_pair):
         DbmsEngine(spark).data_verify(src, dst, "orders", plan=plan)))
     assert rep[0][0].equal
     assert jobs <= JOB_BUDGET["data_verify"], jobs
+
+
+def test_data_migrate_job_budget(spark, sf_dir, tmp_path):
+    src = load_table(spark, sf_dir, "orders")
+    n = []
+    jobs = _jobs(spark, "budget-data_migrate", lambda: n.append(DbmsEngine(spark).data_migrate(
+        src, str(tmp_path / "sink"), ["o_orderkey"], 4, str(tmp_path / "ledger"), "budget")))
+    assert n[0] == src.count()
+    assert jobs <= JOB_BUDGET["data_migrate"], jobs
 
 
 def test_reverify_job_budget(spark, verify_pair, tmp_path):

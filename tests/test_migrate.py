@@ -38,13 +38,13 @@ def test_ledger_resume(spark, sf_dir, tmp_path):
     ledger_path = str(tmp_path / "ledger")
     sink = str(tmp_path / "sink")
 
-    ledger = M.ChunkLedger(spark, ledger_path, task="t1")
-    n1 = M.migrate_chunked(spark, src, preds, sink, ledger)
+    ledger = M.ChunkLedger(ledger_path, task="t1")
+    n1 = M.migrate_chunked(src, preds, sink, ledger)
     assert n1 == src.count()
     # all chunks done -> re-run migrates nothing
-    ledger2 = M.ChunkLedger(spark, ledger_path, task="t1")
+    ledger2 = M.ChunkLedger(ledger_path, task="t1")
     assert ledger2.pending(list(range(len(preds)))) == []
-    n2 = M.migrate_chunked(spark, src, preds, sink, ledger2)
+    n2 = M.migrate_chunked(src, preds, sink, ledger2)
     assert n2 == 0
     # migrated data is complete and correct
     back = spark.read.parquet(sink)
@@ -57,12 +57,65 @@ def test_ledger_partial_resume(spark, sf_dir, tmp_path):
     src = load_table(spark, sf_dir, "orders")
     plan = chunker.plan_chunks(src, ["o_orderkey"], 4)
     preds = chunker.predicates(plan)
-    ledger = M.ChunkLedger(spark, str(tmp_path / "ledger"), task="t2")
+    ledger = M.ChunkLedger(str(tmp_path / "ledger"), task="t2")
     # simulate a crash: chunks 0,1 done, chunk 2 stuck 'running'
     ledger.log(0, preds[0], "done", 1)
     ledger.log(1, preds[1], "done", 1)
     ledger.log(2, preds[2], "running")
     assert ledger.pending(list(range(4))) == [2, 3]
+
+
+def test_ledger_torn_last_line_stays_pending(tmp_path):
+    """A crash mid-append leaves a torn last line: its chunk stays
+    pending, and the next append is not swallowed by it."""
+    path = str(tmp_path / "ledger")
+    ledger = M.ChunkLedger(path, task="t3")
+    ledger.log(0, "p0", "done", 5)
+    ledger.log(1, "p1", "running")
+    with open(path) as f:
+        whole = f.read()
+    ledger.log(1, "p1", "done", 7)
+    with open(path) as f:
+        done_line = f.read()[len(whole):]
+    # crash mid-append: chunk 1's 'done' line is cut in half
+    with open(path, "w") as f:
+        f.write(whole + done_line[: len(done_line) // 2])
+    torn = M.ChunkLedger(path, task="t3")
+    assert torn.pending([0, 1, 2]) == [1, 2]
+    assert torn.state()[1]["status"] == "running"
+    torn.log(2, "p2", "done", 3)
+    assert torn.pending([0, 1, 2]) == [1]
+    assert M.ChunkLedger(path, task="other").pending([0, 1]) == [0, 1]
+
+
+def test_migrate_empty_chunk_logs_zero_rows(spark, sf_dir, tmp_path):
+    """A chunk predicate that matches no rows still writes, logs
+    'done' with 0 rows, and returns: its row count comes from an
+    observation on the write, which must arrive for an empty write."""
+    import threading
+
+    src = load_table(spark, sf_dir, "orders")
+    preds = ["o_orderkey < 0", "1 = 0", "o_orderkey >= 0"]
+    ledger = M.ChunkLedger(str(tmp_path / "ledger"), task="t4")
+    out = []
+    t = threading.Thread(target=lambda: out.append(
+        M.migrate_chunked(src, preds, str(tmp_path / "sink"), ledger)), daemon=True)
+    t.start()
+    t.join(300)
+    assert out, "migrate_chunked did not return"
+    assert out[0] == src.count()
+    state = ledger.state()
+    assert [(state[i]["status"], state[i]["rows"]) for i in range(3)] == \
+        [("done", 0), ("done", 0), ("done", src.count())]
+
+
+def test_migrate_chunked_csv_returns_source_count(spark, sf_dir, tmp_path):
+    src = load_table(spark, sf_dir, "orders")
+    preds = chunker.predicates(chunker.plan_chunks(src, ["o_orderkey"], 3))
+    sink = str(tmp_path / "csv_sink")
+    assert M.migrate_chunked(src, preds, sink, fmt="csv") == src.count()
+    back = spark.read.options(header="true").csv(sink)
+    assert back.count() == src.count()
 
 
 def test_partitioned_write_prunes_on_read(spark, sf_dir, tmp_path):
