@@ -10,8 +10,9 @@ data_compare_seek.go:49-430) as declarative Spark plans:
 - J1 multiset diff  -> groupBy-count + full-outer join (hash or
   sort-merge picked by Catalyst; null-safe key equality).
 - J2 chunk checksum -> map-side chunk-id + partial-aggregated slice
-  sums, joined chunk-to-chunk; the join (at most n_chunks rows) is
-  the one collect, and its unequal chunks drive the drilldown.
+  sums; both sides' sums (at most n_chunks rows each) are the one
+  collect, compared chunk-to-chunk on the driver, and the unequal
+  chunks drive the drilldown.
 - J3 column seek    -> one pass computing per-column slice sums for
   every column simultaneously (no per-column rescans like the
   reference's drill-down loop needed — columnar scan amortizes it).
@@ -342,27 +343,31 @@ def chunked_checksum_crc32(
     )
 
 
-def diff_chunk_sums(src_sums: DataFrame, dst_sums: DataFrame) -> DataFrame:
-    """The chunk-sum comparison every chunked verify shares: one
-    full-outer join on ``chunk_id``.  The sum columns are whatever the
-    inputs carry besides ``chunk_id`` — ``cnt`` (ROWS), ``cnt, h0..h3``
-    (MD5) or ``cnt, crc_sum`` (CRC32) — so one comparison serves every
-    method.  Output: ``chunk_id, src_cnt, dst_cnt, same``, one row per
-    chunk on either side; ``same`` is true when every sum column is
-    null-safe equal (a chunk present on one side only differs, and
-    its missing side counts 0).  Callers filter on ``same``."""
-    sums = [c for c in src_sums.columns if c != "chunk_id"]
-    sa = src_sums.select("chunk_id", *[F.col(c).alias(f"src_{c}") for c in sums])
-    sb = dst_sums.select("chunk_id", *[F.col(c).alias(f"dst_{c}") for c in sums])
-    same = F.lit(True)
-    for c in sums:
-        same = same & F.col(f"src_{c}").eqNullSafe(F.col(f"dst_{c}"))
-    return sa.join(sb, "chunk_id", "full_outer").select(
-        "chunk_id",
-        F.coalesce("src_cnt", F.lit(0)).alias("src_cnt"),
-        F.coalesce("dst_cnt", F.lit(0)).alias("dst_cnt"),
-        same.alias("same"),
-    )
+def collect_chunk_sums(*sides: DataFrame) -> list[dict[int, tuple]]:
+    """Per-chunk sums of every side in ONE Spark job: tag each side,
+    union, collect, split.  Each side is a ``chunk_id`` column plus sum
+    columns — ``cnt`` (ROWS), ``cnt, h0..h3`` (MD5) or ``cnt, crc_sum``
+    (CRC32) — named alike on every side.  Returns, per side,
+    ``{chunk_id: sums}`` with the sums in the first side's column order
+    (``cnt`` first).  Driver-side summaries only, never row data: at
+    most ``n_chunks`` rows per side, the bound the ``ChunkPlan`` the
+    driver already holds imposes."""
+    names = [c for c in sides[0].columns if c != "chunk_id"]
+    tagged = [s.withColumn("__side", F.lit(i)) for i, s in enumerate(sides)]
+    union = tagged[0]
+    for t in tagged[1:]:
+        union = union.unionByName(t)
+    out: list[dict[int, tuple]] = [{} for _ in sides]
+    for r in union.collect():
+        out[r["__side"]][r["chunk_id"]] = tuple(r[c] for c in names)
+    return out
+
+
+def differing_chunks(a: dict[int, tuple], b: dict[int, tuple]) -> list[int]:
+    """The chunk-sum comparison every chunked verify shares: sorted ids
+    of the chunks whose sums differ between two sides.  A chunk present
+    on one side only differs."""
+    return sorted(c for c in a.keys() | b.keys() if a.get(c) != b.get(c))
 
 
 def seek_columns(
@@ -392,15 +397,14 @@ def seek_columns(
             aggs.append(
                 F.sum(F.conv(F.substring(h, 1, 8), 16, 10).cast("decimal(38,0)")).alias(f"__h_{c}")
             )
-        return df.agg(*aggs)
+        return df.agg(*aggs).withColumn("chunk_id", F.lit(0))
 
-    s_row, d_row = _collect_sides(side(src, fields_s), side(dst, fields_d))
+    s, d = (sums[0] for sums in collect_chunk_sums(side(src, fields_s), side(dst, fields_d)))
     rows = [
-        (c, s_row["cnt"], d_row["cnt"], s_row[f"__h_{c}"], d_row[f"__h_{c}"],
-         bool(s_row["cnt"] == d_row["cnt"] and s_row[f"__h_{c}"] == d_row[f"__h_{c}"]))
-        for c in cols
+        (c, s[0], d[0], s[1 + i], d[1 + i], bool(s[0] == d[0] and s[1 + i] == d[1 + i]))
+        for i, c in enumerate(cols)
     ]
-    return literal_df(src.sparkSession, 
+    return literal_df(src.sparkSession,
         rows, "col_name string, src_cnt long, dst_cnt long, src_h0 decimal(38,0), dst_h0 decimal(38,0), equal boolean"
     )
 
@@ -422,15 +426,14 @@ def compare_table(
     method: str = "MD5_SLICES",
 ) -> CompareReport:
     """End-to-end table compare (J2 with A1/A2): per-chunk sums of
-    both sides, joined by :func:`diff_chunk_sums` and collected in ONE
-    action.  ``method`` is a ladder value from
-    :func:`compare_method_for`: 'ROWS' sums ``cnt`` only (the
-    per-chunk COUNT), 'CRC32_SLICES' ``cnt, crc_sum``, and
+    both sides collected in ONE action (:func:`collect_chunk_sums`) and
+    compared on the driver (:func:`differing_chunks`).  ``method`` is a
+    ladder value from :func:`compare_method_for`: 'ROWS' sums ``cnt``
+    only (the per-chunk COUNT), 'CRC32_SLICES' ``cnt, crc_sum``, and
     'MD5_SLICES' / 'HASH_PROGRAM' ``cnt, h0..h3``.  The chunk id comes
     from ``plan``; with no plan the whole table is chunk 0, so a
     mismatch reports ``[0]``.  Row counts are the sums of the
-    per-chunk counts.  Driver-side result: at most ``n_chunks`` rows,
-    a bound the plan already imposes."""
+    per-chunk counts."""
     cols = cols or src.columns
 
     def sums(df: DataFrame) -> DataFrame:
@@ -440,31 +443,10 @@ def compare_table(
         check = chunked_checksum_crc32 if method == "CRC32_SLICES" else chunked_checksum
         return check(df, cid, cols, oracle_empty_is_null)
 
-    rows = diff_chunk_sums(sums(src), sums(dst)).collect()
-    bad = sorted(r["chunk_id"] for r in rows if not r["same"])
-    return CompareReport(not bad, sum(r["src_cnt"] for r in rows),
-                         sum(r["dst_cnt"] for r in rows), bad)
-
-
-def _collect_sides(s_agg: DataFrame, d_agg: DataFrame):
-    """Collect two schema-identical ONE-ROW aggregates in a single
-    Spark job: tag, union, collect, split.  Driver-side summaries only
-    — never row data."""
-    both = {r["__side"]: r for r in (
-        s_agg.withColumn("__side", F.lit("s"))
-        .unionByName(d_agg.withColumn("__side", F.lit("d")))
-        .collect())}
-    return both["s"], both["d"]
-
-
-def in_chunks(df: DataFrame, ids: list[int], col: str = "chunk_id") -> DataFrame:
-    """Rows of ``df`` whose ``col`` is one of ``ids``: a broadcast
-    semi-join against the id list shipped as a literal relation.  This
-    is the exactness boundary behind every range-pruned chunk read
-    (:func:`drilldown_chunks`, ``reverify``): the capped range
-    predicate may read gap chunks, this drops them."""
-    ids_df = literal_df(df.sparkSession, [(i,) for i in ids], f"{col} int")
-    return df.join(F.broadcast(ids_df), col, "left_semi")
+    s, d = collect_chunk_sums(sums(src), sums(dst))
+    bad = differing_chunks(s, d)
+    return CompareReport(not bad, sum(v[0] for v in s.values()),
+                         sum(v[0] for v in d.values()), bad)
 
 
 def drilldown_chunks(
@@ -481,9 +463,10 @@ def drilldown_chunks(
     range predicate (contiguous mismatched chunks coalesce; capped at
     ``max_ranges`` OR-terms — the same shape as reverify's pushdown,
     so mass corruption at millions of chunks can't blow up the plan
-    text), and exactness from :func:`in_chunks` on each side — rows
-    of gap chunks swallowed by the cap never enter the diff.  Output
-    matches :func:`multiset_diff` plus the chunk_id."""
+    text), and exactness from an ``isin`` on each side's chunk id (an
+    InSet of at most ``n_chunks`` ints, the bound the plan imposes) —
+    rows of gap chunks swallowed by the cap never enter the diff.
+    Output matches :func:`multiset_diff` plus the chunk_id."""
     from dbms_spark.plans.chunker import ranges_predicate
 
     if not chunk_ids:
@@ -494,9 +477,7 @@ def drilldown_chunks(
 
     def side(df: DataFrame) -> DataFrame:
         sub = df.filter(F.expr(pred))
-        return in_chunks(
-            sub.withColumn("__cid", assign_chunk_id(plan, sub).cast("int")), ids, "__cid"
-        ).drop("__cid")
+        return sub.filter(assign_chunk_id(plan, sub).isin(ids))
 
     diff = multiset_diff(side(src), side(dst), cols)
     if all(k in diff.columns for k in plan.key_cols):

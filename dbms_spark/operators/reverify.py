@@ -8,23 +8,22 @@ path).  Re-expressed Spark-first:
 
 - the LEDGER is a parquet table of per-chunk checksum sums from the
   last verified run (``chunk_id, cnt, h0..h3``)
-- a re-verify recomputes SOURCE sums (one scan, persisted) and diffs
-  them against the ledger (``compare.diff_chunk_sums``) to find
-  changed/new/vanished chunks; their ids are collected in ONE action.
-  The sums themselves never reach the driver.
-- the changed ids live on the driver, like the reference's chunk
-  lists in its meta DB.  That never raises the driver's memory order:
-  the driver already holds the ``ChunkPlan`` (n_chunks - 1 bound
-  tuples, each at least as large as an id), so a list of at most
-  n_chunks ints is bounded by the plan it came from.
+- a re-verify recomputes the SOURCE sums (one scan) and collects them
+  together with the ledger in ONE action
+  (``compare.collect_chunk_sums``); the changed, new or vanished
+  chunks are found on the driver (``compare.differing_chunks``)
+- per-chunk sums live on the driver, like the reference's chunk
+  lists and chunk results in its meta DB.  That never raises the
+  driver's memory order: the driver already holds the ``ChunkPlan``
+  (n_chunks - 1 bound tuples), and each side's sums are at most
+  n_chunks rows of a few numbers, bounded by the plan they came from
 - only the changed chunks' key ranges are read on the TARGET side:
   contiguous ids coalesce into a range predicate capped at
   ``max_ranges`` OR-terms (``chunker.ranges_predicate``) that reaches
   the parquet/JDBC scan (PushedFilters)
-- both sides' sums are restricted to the changed ids by the broadcast
-  semi-join drilldown also uses (``compare.in_chunks``), so a read the
-  cap widened still compares exactly the changed chunks; the
-  mismatched ids are collected once
+- the target's sums are collected once and only the changed chunks
+  are compared, so a read the cap widened still compares exactly the
+  changed chunks
 
 At 100 TB this turns a nightly full compare into an incremental one
 proportional to churn, with pushdown text O(max_ranges) even at
@@ -38,7 +37,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbms_spark.operators.compare import chunked_checksum, diff_chunk_sums, in_chunks
+from dbms_spark.operators.compare import (
+    chunked_checksum,
+    collect_chunk_sums,
+    differing_chunks,
+)
 from dbms_spark.plans.chunker import (
     ChunkPlan,
     _cap_runs,
@@ -46,18 +49,12 @@ from dbms_spark.plans.chunker import (
     assign_chunk_id,
     ranges_predicate,
 )
+from dbms_spark.plans.parallelism import literal_df
 
 
 def save_ledger(sums: DataFrame, path: str) -> None:
-    """Persist the chunk-sum ledger AND release its cache: ``reverify``
-    returns the sums persisted (they back several actions inside one
-    round), and the parquet write here is the natural end of that
-    lifecycle — a long-lived session running nightly rounds must not
-    accumulate cached chunk-sum relations.  Callers that skip
-    save_ledger own the ``sums.unpersist()`` call themselves (see the
-    reverify docstring)."""
+    """Write the chunk-sum ledger the next round starts from."""
     sums.write.mode("overwrite").parquet(path)
-    sums.unpersist()
 
 
 def load_ledger(spark: SparkSession, path: str) -> DataFrame | None:
@@ -65,14 +62,6 @@ def load_ledger(spark: SparkSession, path: str) -> DataFrame | None:
         return spark.read.parquet(path)
     except Exception:
         return None
-
-
-def changed_chunks(src_sums: DataFrame, ledger: DataFrame | None) -> DataFrame:
-    """Chunk ids whose source checksum differs from the ledger (or all
-    of them when there is no ledger yet)."""
-    if ledger is None:
-        return src_sums.select("chunk_id")
-    return diff_chunk_sums(src_sums, ledger).filter(~F.col("same")).select("chunk_id")
 
 
 @dataclass(frozen=True)
@@ -95,10 +84,6 @@ class ReverifyReport:
         return len(self.mismatched_chunks)
 
 
-def _ids(df: DataFrame) -> list[int]:
-    return sorted(r["chunk_id"] for r in df.select("chunk_id").collect())
-
-
 def reverify(
     src: DataFrame,
     dst: DataFrame,
@@ -116,25 +101,32 @@ def reverify(
     trusted from the prior verified run and the target is NOT re-read
     for them — that skip is the point.
 
-    Lifecycle: the returned sums are PERSISTED (they back multiple
-    actions within the round).  :func:`save_ledger` unpersists them
-    after the parquet write — the normal nightly flow.  A caller that
-    does not save the ledger must call ``sums.unpersist()`` itself, or
-    a long-lived session accumulates cached chunk-sum relations.
-
-    Driver transfer: two id-only collects (changed, then mismatched),
-    each at most ``plan.n_chunks`` ints; the sums stay distributed."""
+    Driver transfer: two collects, each at most ``plan.n_chunks`` rows
+    per side of ``chunk_id`` and sums, never row data — the source sums
+    with the ledger, then the range-pruned target's sums.  The returned
+    ledger is a literal relation of the collected source sums, so
+    nothing is left cached."""
     cols = cols or src.columns
-    src_sums = chunked_checksum(
-        src, assign_chunk_id(plan, src), cols, oracle_empty_is_null
-    ).persist()
-    ids = _ids(changed_chunks(src_sums, ledger))
+
+    def sums(df: DataFrame) -> DataFrame:
+        return chunked_checksum(df, assign_chunk_id(plan, df), cols, oracle_empty_is_null)
+
+    src_sums = sums(src)
+    if ledger is None:
+        new, old = collect_chunk_sums(src_sums)[0], {}
+    else:
+        new, old = collect_chunk_sums(src_sums, ledger)
+    ids = differing_chunks(new, old)
+    new_ledger = literal_df(src.sparkSession,
+                            [(c, *v) for c, v in sorted(new.items())], src_sums.schema)
     if not ids:
-        return src_sums, ReverifyReport([], [], plan.n_chunks, [])
+        return new_ledger, ReverifyReport([], [], plan.n_chunks, [])
     dst_sub = dst.filter(F.expr(ranges_predicate(plan, ids, max_ranges)))
-    dst_sums = chunked_checksum(
-        dst_sub, assign_chunk_id(plan, dst_sub), cols, oracle_empty_is_null)
-    bad = _ids(diff_chunk_sums(in_chunks(src_sums, ids), in_chunks(dst_sums, ids))
-               .filter(~F.col("same")))
-    return src_sums, ReverifyReport(
+    (got,) = collect_chunk_sums(sums(dst_sub))
+
+    def changed(by_chunk: dict) -> dict:
+        return {c: by_chunk[c] for c in ids if c in by_chunk}
+
+    bad = differing_chunks(changed(new), changed(got))
+    return new_ledger, ReverifyReport(
         ids, bad, plan.n_chunks, _cap_runs(_runs(ids), max_ranges))

@@ -136,10 +136,18 @@ def sql_literal(v, dialect: str = "mysql") -> str:
         return f"DATE '{v.isoformat()}'"
     if isinstance(v, bool):
         return "TRUE" if v else "FALSE"
-    if dialect == "spark" and isinstance(v, float) and not math.isfinite(v):
-        # str() gives nan / inf / -inf, which Spark parses as column names
+    if isinstance(v, float) and not math.isfinite(v):
+        # str() gives nan / inf / -inf, which parse as column names
         word = "NaN" if math.isnan(v) else ("Infinity" if v > 0 else "-Infinity")
-        return f"CAST('{word}' AS DOUBLE)"
+        if dialect == "spark":
+            return f"CAST('{word}' AS DOUBLE)"
+        if dialect == "postgres":
+            return f"'{word}'::float8"
+        if dialect == "oracle":
+            return {"NaN": "BINARY_DOUBLE_NAN", "Infinity": "BINARY_DOUBLE_INFINITY",
+                    "-Infinity": "-BINARY_DOUBLE_INFINITY"}[word]
+        # MySQL, TiDB and Derby doubles cannot hold these values
+        raise ValueError(f"{dialect} cannot represent the double value {v}")
     return str(v)
 
 
@@ -324,9 +332,10 @@ def ranges_predicate(plan: ChunkPlan, ids: list[int],
     """Bounded pushdown text covering a chunk-id set: contiguous ids
     coalesce into range predicates, capped at ``max_ranges`` OR-terms
     (beyond that, a minimally-superset covering read).  Callers that
-    need the EXACT chunk set must still restrict by chunk id (a
-    semi-join against the id relation) — the predicate is an
-    I/O-pruning optimization, not the correctness boundary."""
+    need the EXACT chunk set must still restrict by chunk id (an
+    ``isin`` on :func:`assign_chunk_id`, or a driver-side pick of the
+    collected chunk sums) — the predicate is an I/O-pruning
+    optimization, not the correctness boundary."""
     if not ids:
         return "FALSE"
     runs = _cap_runs(_runs(sorted(ids)), max_ranges)
@@ -337,12 +346,10 @@ def ranges_predicate(plan: ChunkPlan, ids: list[int],
     )
 
 
-#: bound count above which assignment switches from the additive
-#: CASE chain (nests O(n) deep — the Catalyst converter StackOverflows
-#: around ~1,000 bounds) to the unrolled binary search (flat plan,
-#: O(log n) comparisons per row).  Below it the chain is kept: on
-#: small plans it runs faster per row than the search's higher-order
-#: loop (crossover in docs/SCALE.md, "Chunk bookkeeping on the driver").
+#: bound count above which assignment switches from the balanced CASE
+#: tree to the unrolled binary search: the tree is faster below it and
+#: loses from ~1,000 bounds on (crossover in docs/SCALE.md, "Chunk
+#: sums on the driver").
 _BINARY_SEARCH_THRESHOLD = 128
 
 
@@ -354,14 +361,12 @@ def assign_chunk_id(plan: ChunkPlan, df: DataFrame) -> Column:
     parsed once: building them as Columns cost a py4j round trip per
     field per bound.  CASTs pin each bound field to the column's exact
     type (TIMESTAMP_NTZ vs TIMESTAMP, INT vs BIGINT), or the struct
-    comparison fails analysis.  Two equivalent forms by bound count:
-    an additive CASE chain for small plans, and — past
+    comparison fails analysis.  Two equivalent forms by bound count,
+    both doing ceil(log2(n+1)) comparisons per row against the plan's
+    sorted bounds: a balanced CASE tree for small plans, and — past
     :data:`_BINARY_SEARCH_THRESHOLD` — a lower-bound binary search
-    unrolled via ``aggregate`` over a ceil(log2(n+1))-step sequence
-    against ONE flat array-of-structs literal.  The chain nests an
-    expression per bound and overflows the converter stack near 1,000
-    bounds; the search keeps the plan flat (one n-child array
-    constructor) and does O(log n) struct comparisons per row, so
+    unrolled via ``aggregate`` against ONE flat array-of-structs
+    literal, so
     reference-style 500-row chunks at scale (10^4-10^6 bounds) assign
     without plan blowup.  NULL keys land in chunk 0 in both forms (a
     NULL comparison counts as 'not greater')."""
@@ -388,8 +393,15 @@ def assign_chunk_id(plan: ChunkPlan, df: DataFrame) -> Column:
 
     n = len(plan.bounds)
     if n <= _BINARY_SEARCH_THRESHOLD:
-        return F.expr(" + ".join(
-            f"CASE WHEN {key} > {bound(b)} THEN 1 ELSE 0 END" for b in plan.bounds))
+        def tree(lo: int, hi: int) -> str:
+            # chunk ids lo..hi; bound[mid] separates chunk mid from mid + 1
+            if lo == hi:
+                return str(lo)
+            mid = (lo + hi) // 2
+            return (f"CASE WHEN {key} > {bound(plan.bounds[mid])} "
+                    f"THEN {tree(mid + 1, hi)} ELSE {tree(lo, mid)} END")
+
+        return F.expr(tree(0, n))
 
     bounds = F.expr("array(" + ", ".join(bound(b) for b in plan.bounds) + ")")
     key_col = F.expr(key)
@@ -399,8 +411,8 @@ def assign_chunk_id(plan: ChunkPlan, df: DataFrame) -> Column:
     def step(acc: Column, _: Column) -> Column:
         lo, hi = acc["lo"], acc["hi"]
         mid = F.floor((lo + hi) / 2).cast("int")
-        # strictly-greater, NULL -> false: matches the chain's
-        # CASE WHEN key > bound THEN 1 ELSE 0 per-bound semantics
+        # strictly-greater, NULL -> false: matches the tree's
+        # CASE WHEN key > bound ... ELSE <left> semantics
         gt = F.coalesce(key_col > F.element_at(bounds, mid + 1), F.lit(False))
         return F.when(
             lo < hi,

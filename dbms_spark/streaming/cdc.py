@@ -265,7 +265,6 @@ def split_key_updates(events: DataFrame, key_cols: list[str]) -> DataFrame:
     null = F.lit(None).cast("string")
 
     def event(**overrides) -> F.Column:
-        # every input column is carried (e.g. a streaming event_time)
         return F.struct(*[overrides.get(c, F.col(c)).alias(c) for c in events.columns])
 
     split = F.array(
@@ -874,16 +873,15 @@ def consume_cdc_stream(
     store: ParquetTableStore,
     events: DataFrame,
     checkpoint_dir: str,
-    watermark: str = "10 seconds",
 ):
     """C-path entry: parsed event stream -> foreachBatch apply with
     exactly-once bookkeeping via checkpointLocation (C5).  The
     micro-batch boundary is the resolvedTs analogue: every event in the
-    batch is resolved by construction."""
-    ts_events = events.withColumn("event_time", F.timestamp_micros(F.col("commit_ts")))
+    batch is resolved by construction, however late its commit_ts (the
+    apply's own commit_ts ordering and applied watermark decide what an
+    event changes)."""
     return (
-        ts_events.withWatermark("event_time", watermark)
-        .writeStream.outputMode("append")
+        events.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(lambda batch, epoch_id: apply_cdc_batch(store, batch))
         .trigger(availableNow=True)

@@ -186,6 +186,34 @@ def test_streaming_end_to_end_with_checkpoint(spark, store, tmp_path):
     assert {r["id"]: r["v"] for r in store.read("t1").collect()} == {2: "b"}
 
 
+def test_streaming_applies_late_events(spark, store, tmp_path):
+    """An event whose commit_ts lags an earlier micro-batch's by far
+    more than any watermark delay still reaches the apply: the consumer
+    has no stateful operator, so lateness is the store's call (its
+    per-table applied watermark), never the stream's."""
+    src_dir = tmp_path / "cdc_in"
+    src_dir.mkdir()
+    sec = 1_000_000
+    # one event per file, one file per micro-batch, file order = arrival
+    arrivals = [("t1", 1, 600 * sec), ("t2", 1, 0), ("t1", 2, 1200 * sec), ("t2", 2, 1 * sec)]
+    for i, (table, key, ts) in enumerate(arrivals):
+        path = src_dir / f"b{i}.json"
+        path.write_text(json.dumps({
+            "schema_name": "db", "table_name": table, "query_type": "INSERT",
+            "commit_ts": ts, "key_json": json.dumps({"id": key}),
+            "new_json": json.dumps({"id": key, "v" if table == "t1" else "x":
+                                    "a" if table == "t1" else 1.0}),
+            "old_json": None, "is_ddl": False, "ddl_query": None}) + "\n")
+        os.utime(path, (1_000 + i, 1_000 + i))
+    stream = (spark.readStream.schema(cdc.CDC_EVENT_SCHEMA)
+              .option("maxFilesPerTrigger", 1).json(str(src_dir)))
+    q = cdc.consume_cdc_stream(store, stream, str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    assert len(q.recentProgress) >= len(arrivals)
+    assert sorted(r["id"] for r in store.read("t1").collect()) == [1, 2]
+    assert sorted(r["id"] for r in store.read("t2").collect()) == [1, 2]
+
+
 def test_windowed_event_counts_streaming(spark, tmp_path):
     """The same windowed aggregation as a REAL stream: file source,
     watermark, append mode after window close."""

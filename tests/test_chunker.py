@@ -3,6 +3,10 @@ chunk sizes are balanced, and assign_chunk_id agrees with the
 predicate rendering (the reference's divider invariants,
 database/processor/data_compare_divider.go)."""
 
+import math
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from dbms_spark.plans import chunker
@@ -68,6 +72,39 @@ def test_sql_literal_escaping():
     assert chunker.sql_literal("o'neil") == "'o''neil'"
     assert chunker.sql_literal(None) == "NULL"
     assert chunker.sql_literal(5) == "5"
+
+
+def test_sql_literal_non_finite_doubles():
+    """NaN and ±Infinity render as values of each dialect — a bare
+    nan / inf parses as a column name — and the dialects whose doubles
+    cannot hold them refuse, so no statement silently mis-targets."""
+    import duckdb
+
+    inf, nan = float("inf"), float("nan")
+    assert chunker.sql_literal(nan, "postgres") == "'NaN'::float8"
+    assert chunker.sql_literal(inf, "postgres") == "'Infinity'::float8"
+    assert chunker.sql_literal(-inf, "postgres") == "'-Infinity'::float8"
+    assert chunker.sql_literal(nan, "oracle") == "BINARY_DOUBLE_NAN"
+    assert chunker.sql_literal(inf, "oracle") == "BINARY_DOUBLE_INFINITY"
+    assert chunker.sql_literal(-inf, "oracle") == "-BINARY_DOUBLE_INFINITY"
+    assert chunker.sql_literal(-inf, "spark") == "CAST('-Infinity' AS DOUBLE)"
+    for dialect in ("mysql", "tidb", "derby"):
+        for v in (nan, inf, -inf):
+            with pytest.raises(ValueError):
+                chunker.sql_literal(v, dialect)
+    # the Postgres cast syntax evaluates to the intended doubles
+    # (DuckDB shares it)
+    got = duckdb.sql("SELECT " + ", ".join(
+        chunker.sql_literal(v, "postgres") for v in (nan, inf, -inf))).fetchone()
+    assert math.isnan(got[0]) and got[1:] == (inf, -inf)
+    # chunk predicates over a non-finite bound carry the same literals
+    plan = chunker.ChunkPlan(("k",), ((-inf,), (0.0,), (nan,)))
+    pg = chunker.predicates(plan, dialect="postgres")
+    assert "'-Infinity'::float8" in pg[0] and "'NaN'::float8" in pg[3]
+    assert "BINARY_DOUBLE_NAN" in chunker.chunk_predicate(plan, 2, dialect="oracle")
+    assert not any(re.search(r"\b(nan|inf)\b", p) for p in pg)
+    with pytest.raises(ValueError):
+        chunker.predicates(plan, dialect="mysql")
 
 
 def test_collated_plan_assignment_consistent(spark):

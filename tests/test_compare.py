@@ -212,6 +212,24 @@ def test_gen_fix_sql_dialects(spark):
     assert all("/*+ HINT */" in s for s in hinted)
 
 
+def test_gen_fix_sql_non_finite_doubles(spark):
+    """A double column holding NaN / ±Infinity repairs with the
+    dialect's own literals; MySQL cannot store them, so it refuses
+    instead of emitting a bare nan column reference."""
+    diff = spark.createDataFrame(
+        [(1, float("nan"), 1, 0), (2, float("inf"), 0, 1), (3, float("-inf"), 1, 0)],
+        "id long, x double, src_cnt long, dst_cnt long")
+    pg = X.gen_fix_sql(diff, "t", ["id", "x"], dialect="postgres")
+    assert any("VALUES (1, 'NaN'::float8)" in s for s in pg)
+    assert any('"x" = \'Infinity\'::float8' in s for s in pg)
+    assert any("VALUES (3, '-Infinity'::float8)" in s for s in pg)
+    ora = " ".join(X.gen_fix_sql(diff, "t", ["id", "x"], dialect="oracle"))
+    assert "BINARY_DOUBLE_NAN" in ora and '"x" = BINARY_DOUBLE_INFINITY' in ora
+    assert "-BINARY_DOUBLE_INFINITY" in ora
+    with pytest.raises(ValueError):
+        X.gen_fix_sql(diff, "t", ["id", "x"], dialect="mysql")
+
+
 def test_multiset_diff_collated(spark):
     src = spark.createDataFrame(
         [(1, "Alpha"), (2, "beta"), (3, "gamma"), (4, "delta")], "id long, s string")

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dbms_spark.engine import DbmsEngine
+from dbms_spark.operators import compare
 from dbms_spark.operators import reverify as R
 from dbms_spark.plans import chunker
 from dbms_spark.sources.catalog import load_table
@@ -31,10 +32,16 @@ JOB_BUDGET = {
     # sides' parallelism guards and sum exchanges); the row counts are
     # the sums of the per-chunk counts
     "data_verify": 5,
-    # changed-id collect (source sums persisted, ledger diff: 5) + the
-    # mismatched-id collect (range-pruned target sums and one
-    # broadcast of the id list: 4), the report reads included
-    "reverify": 9,
+    # ONE collect of the source sums with the ledger + ONE collect of
+    # the range-pruned target's sums; both comparisons run on the
+    # driver, and nothing is persisted
+    "reverify": 6,
+    # whole-table MD5 compare (no plan: every row is chunk 0): ONE
+    # collect of both sides' sums, compared on the driver
+    "data_compare": 5,
+    # row diff of the mismatched chunks: the range-pruned read of each
+    # side restricted by an isin on the chunk id, no broadcast
+    "drilldown_chunks": 5,
 }
 
 
@@ -136,23 +143,45 @@ def test_data_migrate_job_budget(spark, sf_dir, tmp_path):
     assert jobs <= JOB_BUDGET["data_migrate"], jobs
 
 
+def _drifted(src):
+    return src.withColumn(
+        "o_totalprice",
+        F.when(F.col("o_orderkey") % 501 == 0, F.col("o_totalprice") + 1.0)
+        .otherwise(F.col("o_totalprice")))
+
+
 def test_reverify_job_budget(spark, verify_pair, tmp_path):
     src, dst, plan = verify_pair
     sums, _ = R.reverify(src, dst, plan, ledger=None)
     R.save_ledger(sums, str(tmp_path / "ledger"))
     ledger = R.load_ledger(spark, str(tmp_path / "ledger"))
-    drifted = src.withColumn(
-        "o_totalprice",
-        F.when(F.col("o_orderkey") % 501 == 0, F.col("o_totalprice") + 1.0)
-        .otherwise(F.col("o_totalprice")))
+    drifted = _drifted(src)
     out = []
-
-    def run():
-        sums, rep = R.reverify(drifted, dst, plan, ledger)
-        out.append((rep.checked_chunks, rep.mismatched_chunks))
-        sums.unpersist()
-
-    jobs = _jobs(spark, "budget-reverify", run)
-    checked, mismatched = out[0]
-    assert checked and checked == mismatched
+    jobs = _jobs(spark, "budget-reverify",
+                 lambda: out.append(R.reverify(drifted, dst, plan, ledger)[1]))
+    assert out[0].checked_chunks and out[0].checked_chunks == out[0].mismatched_chunks
     assert jobs <= JOB_BUDGET["reverify"], jobs
+
+
+def test_data_compare_job_budget(spark, verify_pair):
+    src, dst, _ = verify_pair
+    rep = []
+    jobs = _jobs(spark, "budget-data_compare",
+                 lambda: rep.append(DbmsEngine(spark).data_compare(_drifted(src), dst)))
+    assert not rep[0].equal and rep[0].mismatched_chunks == [0]
+    assert rep[0].src_cnt == rep[0].dst_cnt == src.count()
+    assert jobs <= JOB_BUDGET["data_compare"], jobs
+
+
+def test_drilldown_chunks_job_budget(spark, verify_pair):
+    src, dst, plan = verify_pair
+    drifted = _drifted(src)
+    bad = sorted({r["cid"] for r in drifted.filter("o_orderkey % 501 = 0")
+                  .select(chunker.assign_chunk_id(plan, drifted).alias("cid")).collect()})
+    rows = []
+    jobs = _jobs(spark, "budget-drilldown_chunks", lambda: rows.extend(
+        compare.drilldown_chunks(drifted, dst, plan, bad).collect()))
+    # every drifted order shows up once per side, in its own chunk
+    assert len(rows) == 2 * drifted.filter("o_orderkey % 501 = 0").count()
+    assert {r["chunk_id"] for r in rows} == set(bad)
+    assert jobs <= JOB_BUDGET["drilldown_chunks"], jobs

@@ -105,11 +105,17 @@ def test_target_predicate_bounded_at_high_churn():
     assert chunker.ranges_predicate(plan, []) == "FALSE"
 
 
-def test_reverify_never_collects_sums(orders, plan, spark, tmp_path, monkeypatch):
-    """Driver-memory contract: the only per-chunk data crossing to the
-    driver is chunk ids — every collected frame is id-only, holds at
-    most ``plan.n_chunks`` rows (the plan the driver already holds
-    bounds it), and never carries the checksum sum columns."""
+def test_reverify_driver_transfer_bounded_by_plan(orders, plan, spark, tmp_path,
+                                                 monkeypatch):
+    """Driver-memory contract: what crosses to the driver is per-chunk
+    sums — every collected frame carries only ``chunk_id``, the side
+    tag and the sum columns, never row data, and holds at most
+    ``plan.n_chunks`` rows per side (the plan the driver already holds
+    bounds it).  Sums rather than ids only: comparing them on the
+    driver replaces a join job, a semi-join broadcast and a persisted
+    relation with a few numbers per chunk."""
+    from collections import Counter
+
     try:  # Spark 4: the concrete class overrides the abstract base
         from pyspark.sql.classic.dataframe import DataFrame as SparkDF
     except ImportError:
@@ -119,7 +125,7 @@ def test_reverify_never_collects_sums(orders, plan, spark, tmp_path, monkeypatch
 
     def spy(self):
         rows = orig(self)
-        collected.append((set(self.columns), len(rows)))
+        collected.append((set(self.columns), Counter(r["__side"] for r in rows)))
         return rows
 
     monkeypatch.setattr(SparkDF, "collect", spy)
@@ -132,10 +138,10 @@ def test_reverify_never_collects_sums(orders, plan, spark, tmp_path, monkeypatch
         .otherwise(F.col("o_totalprice")),
     )
     R.reverify(src2, orders, plan, ledger=ledger)
-    assert collected, "spy did not engage"
-    for cols, n in collected:
-        assert cols == {"chunk_id"}, f"non-id frame collected: {cols}"
-        assert n <= plan.n_chunks, f"{n} rows collected, plan has {plan.n_chunks}"
+    assert len(collected) == 4, "two collects per round"
+    for cols, per_side in collected:
+        assert cols == {"chunk_id", "__side", "cnt", "h0", "h1", "h2", "h3"}, cols
+        assert max(per_side.values()) <= plan.n_chunks, (per_side, plan.n_chunks)
 
 
 def test_capped_read_still_exact(orders, spark, tmp_path):
@@ -158,12 +164,23 @@ def test_capped_read_still_exact(orders, spark, tmp_path):
     assert len(uncapped.checked_chunks) > 1      # the cap actually bit
 
 
-def test_save_ledger_unpersists(orders, plan, tmp_path):
-    """save_ledger ends the persisted-sums lifecycle: after the write
-    the returned relation is no longer cached (nightly loops must not
-    accumulate cached chunk-sum relations)."""
+def test_reverify_leaves_nothing_persisted(orders, plan, spark):
+    """No verb leaves cached blocks behind: a round that never calls
+    save_ledger still adds no persistent RDD, on the first run and on
+    an incremental one that reads the target."""
+    orders.count()   # the module's cached fixture is materialized first
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keys())
+
+    before = persisted()
     sums, _ = R.reverify(orders, orders, plan, ledger=None)
-    assert sums.storageLevel.useMemory or sums.storageLevel.useDisk
-    R.save_ledger(sums, str(tmp_path / "ledger"))
-    lvl = sums.storageLevel
-    assert not (lvl.useMemory or lvl.useDisk)
+    src2 = orders.withColumn(
+        "o_totalprice",
+        F.when(F.col("o_orderkey") % 501 == 0, F.col("o_totalprice") + 1.0)
+        .otherwise(F.col("o_totalprice")),
+    )
+    _, rep = R.reverify(src2, orders, plan, ledger=sums)
+    assert rep.checked_chunks and rep.mismatched_chunks == rep.checked_chunks
+    assert persisted() == before
