@@ -65,11 +65,11 @@ class DbmsEngine:
 
     def sql_migrate(self, sql: str, sf_dir: str, sink_path: str) -> int:
         """S6 custom-SQL migrate: run user SQL over registered catalog
-        views, land the result."""
+        views, land the result.  Returns the rows written, counted on
+        the write itself: the query runs once, so even a
+        non-deterministic one reports exactly what landed."""
         catalog.register_views(self.spark, sf_dir)
-        df = self.spark.sql(sql)
-        migrate_ops.write_parquet(df, sink_path)
-        return df.count()
+        return migrate_ops.write_counted(self.spark.sql(sql), sink_path)
 
     # -- data compare ----------------------------------------------------
 

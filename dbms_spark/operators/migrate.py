@@ -15,7 +15,11 @@ only when the target layout demands it; CSV/parquet writes stream
 per-partition with no driver involvement.  Per-chunk bookkeeping is
 driver data, like the reference's coordinator rows: the ledger is an
 O(chunks) journal file, and a chunk's row count rides an
-``observe()`` on its own write, so a chunk costs one Spark job.
+``observe()`` on its own write, so a chunk costs one Spark job.  The
+pending chunks' jobs run concurrently from a driver thread pool (the
+reference's chunk-parallel extract), so chunks narrower than the
+cluster still keep every core busy; a chunk whose write fails stays
+pending in the ledger.
 """
 
 from __future__ import annotations
@@ -24,10 +28,13 @@ import datetime
 import json
 import os
 import shutil
+import threading
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 from dbms_spark.streaming.cdc import write_durably
 
 
@@ -161,17 +168,21 @@ class ChunkLedger:
     A crash mid-append can leave a torn last line: it is skipped on
     read, so its chunk stays pending, and every append starts on a
     fresh line, so a torn line never swallows the next event.  Several
-    tasks may share one journal file."""
+    tasks, and the concurrent chunks of one task, may share one
+    journal file: appends are serialized under a process-wide lock."""
 
     path: str
     task: str
+
+    _append_lock = threading.Lock()
 
     def log(self, chunk_id: int, predicate: str, status: str, rows: int = 0) -> None:
         os.makedirs(os.path.dirname(os.path.abspath(self.path)), exist_ok=True)
         event = {"task": self.task, "chunk_id": chunk_id, "predicate": predicate,
                  "status": status, "rows": rows,
                  "ts": datetime.datetime.now(datetime.timezone.utc).isoformat()}
-        write_durably(self.path, "\n" + json.dumps(event), "a")
+        with self._append_lock:
+            write_durably(self.path, "\n" + json.dumps(event), "a")
 
     def state(self) -> dict[int, dict]:
         """chunk id -> latest event of this task."""
@@ -216,22 +227,45 @@ def migrate_chunked(
     fmt: str = "parquet",
 ) -> int:
     """Resumable chunked migrate: each chunk predicate becomes one
-    filtered write into a chunk-keyed subdirectory; completed chunks
-    are skipped on re-run.  Returns the rows written by this call.
-    (With a JDBC source the same predicates feed
+    filtered, observed write into a chunk-keyed subdirectory;
+    completed chunks are skipped on re-run.  Returns the rows written
+    by this call.  (With a JDBC source the same predicates feed
     ``spark.read.jdbc(predicates=...)`` so each chunk is one remote
-    range scan — S1/S2.)"""
+    range scan — S1/S2.)
+
+    The pending chunks' writes run concurrently, one Spark job each,
+    from ``min(pending, defaultParallelism)`` driver threads.  Each
+    chunk logs ``running`` right before its write and ``done`` with
+    its count right after, so a chunk whose write raises stays
+    ``running`` and is pending on resume.  After a failure no further
+    chunk starts, the chunks in flight finish and log ``done``, and
+    then the error of the first failed chunk is raised."""
     todo = range(len(predicates)) if ledger is None else ledger.pending(list(range(len(predicates))))
-    migrated = 0
-    for i in todo:
+    if not todo:
+        return 0
+    spark = src.sparkSession
+
+    def run(i: int) -> int:
         pred = predicates[i]
         if ledger:
             ledger.log(i, pred, "running")
         n = write_counted(src.filter(pred), os.path.join(sink_path, f"chunk={i}"), fmt)
         if ledger:
             ledger.log(i, pred, "done", n)
-        migrated += n
-    return migrated
+        return n
+
+    workers = min(len(todo), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(workers) as pool:
+        # one wrap per chunk: each thread gets its own copy of the
+        # caller's local properties (job group, SQL execution id)
+        futures = [pool.submit(inheritable_thread_target(spark)(run), i) for i in todo]
+        wait(futures, return_when=FIRST_EXCEPTION)
+        for f in futures:
+            f.cancel()
+    for f in futures:
+        if not f.cancelled() and f.exception() is not None:
+            raise f.exception()
+    return sum(f.result() for f in futures)
 
 
 # ---------------------------------------------------------------------------

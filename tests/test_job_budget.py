@@ -15,7 +15,7 @@ from dbms_spark.engine import DbmsEngine
 from dbms_spark.operators import compare
 from dbms_spark.operators import reverify as R
 from dbms_spark.plans import chunker
-from dbms_spark.sources.catalog import load_table
+from dbms_spark.sources.catalog import load_table, register_views
 from dbms_spark.streaming import cdc
 
 #: verb -> max Spark jobs per call
@@ -25,9 +25,14 @@ JOB_BUDGET = {
     # probe + the broadcast of the batch keys + the clustered write
     "apply_cdc_batch": 7,
     # 4-chunk migrate with a ledger: plan_chunks (its row count and
-    # the sampled ntile collect) + one observed write per chunk; the
-    # ledger is a driver-side journal and runs no job
+    # the sampled ntile collect) + one observed write per chunk, run
+    # from worker threads under the caller's job group; the ledger is
+    # a driver-side journal and runs no job
     "data_migrate": 8,
+    # custom-SQL migrate over registered views: ONE observed write;
+    # the count is not a second run of the user's query (the catalog's
+    # once-per-file schema inference is warmed first)
+    "sql_migrate": 1,
     # clean 10-chunk verify: ONE collect of the chunk-sum join (both
     # sides' parallelism guards and sum exchanges); the row counts are
     # the sums of the per-chunk counts
@@ -135,12 +140,28 @@ def test_data_verify_job_budget(spark, verify_pair):
 
 
 def test_data_migrate_job_budget(spark, sf_dir, tmp_path):
+    """The plan's jobs plus exactly one job per chunk: the chunk
+    writes run on worker threads, and a thread that lost the caller's
+    job group would drop its job out of this count."""
     src = load_table(spark, sf_dir, "orders")
+    plan_jobs = _jobs(spark, "budget-data_migrate-plan",
+                      lambda: chunker.plan_chunks(src, ["o_orderkey"], 4))
     n = []
     jobs = _jobs(spark, "budget-data_migrate", lambda: n.append(DbmsEngine(spark).data_migrate(
         src, str(tmp_path / "sink"), ["o_orderkey"], 4, str(tmp_path / "ledger"), "budget")))
     assert n[0] == src.count()
+    assert jobs == plan_jobs + 4, (plan_jobs, jobs)
     assert jobs <= JOB_BUDGET["data_migrate"], jobs
+
+
+def test_sql_migrate_job_budget(spark, sf_dir, tmp_path):
+    register_views(spark, sf_dir)
+    out = str(tmp_path / "sink")
+    n = []
+    jobs = _jobs(spark, "budget-sql_migrate", lambda: n.append(DbmsEngine(spark).sql_migrate(
+        "SELECT o_orderkey FROM orders WHERE rand() < 0.5", sf_dir, out)))
+    assert n[0] == spark.read.parquet(out).count()
+    assert jobs <= JOB_BUDGET["sql_migrate"], jobs
 
 
 def _drifted(src):

@@ -2,8 +2,12 @@
 chunk-ledger resume (the reference's checkpoint re-entrancy,
 example/stmt_migrate_task.toml:69 enable-checkpoint)."""
 
+import json
 import os
+import sys
+import threading
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbms_spark.operators import migrate as M
@@ -107,6 +111,82 @@ def test_migrate_empty_chunk_logs_zero_rows(spark, sf_dir, tmp_path):
     state = ledger.state()
     assert [(state[i]["status"], state[i]["rows"]) for i in range(3)] == \
         [("done", 0), ("done", 0), ("done", src.count())]
+
+
+def test_migrate_failed_chunk_stays_pending(spark, sf_dir, tmp_path):
+    """Chunks run concurrently: when one chunk's write fails, the
+    others still end 'done' with their counts, the failed chunk stays
+    'running', the error reaches the caller, and a re-run writes only
+    the failed chunk."""
+    src = load_table(spark, sf_dir, "orders")
+    preds = chunker.predicates(chunker.plan_chunks(src, ["o_orderkey"], 4))
+    # the last chunk fails at run time; the earlier chunks are started
+    # before it whatever the pool size
+    broken = preds[:3] + [f"({preds[3]}) AND raise_error('chunk 3 down') IS NULL"]
+    ledger_path, sink = str(tmp_path / "ledger"), str(tmp_path / "sink")
+    ledger = M.ChunkLedger(ledger_path, task="t5")
+    with pytest.raises(Exception, match="chunk 3 down"):
+        M.migrate_chunked(src, broken, sink, ledger)
+    state = ledger.state()
+    expected = [src.filter(p).count() for p in preds]
+    assert [(state[i]["status"], state[i]["rows"]) for i in range(3)] == \
+        [("done", n) for n in expected[:3]]
+    assert state[3]["status"] == "running"
+    assert ledger.pending(list(range(4))) == [3]
+
+    with open(ledger_path) as f:
+        before = f.read()
+    assert M.migrate_chunked(src, preds, sink, ledger) == expected[3]
+    with open(ledger_path) as f:
+        added = [json.loads(ln) for ln in f.read()[len(before):].splitlines() if ln]
+    assert [(e["chunk_id"], e["status"]) for e in added] == [(3, "running"), (3, "done")]
+    back = spark.read.parquet(sink).drop("chunk")
+    assert back.count() == src.count()
+    assert back.exceptAll(src).count() == 0 and src.exceptAll(back).count() == 0
+
+
+def test_ledger_concurrent_appends_stay_whole(tmp_path, monkeypatch):
+    """Appends from many threads at once leave one whole, parseable
+    line each, even where one append reaches the file in pieces (a
+    filesystem without atomic appends, or a short write)."""
+    import time
+
+    whole_write = M.write_durably
+
+    def write_in_pieces(path, text, mode="w"):
+        half = len(text) // 2
+        whole_write(path, text[:half], mode)
+        time.sleep(0.001)
+        whole_write(path, text[half:], mode)
+
+    monkeypatch.setattr(M, "write_durably", write_in_pieces)
+    path = str(tmp_path / "ledger")
+    ledger = M.ChunkLedger(path, task="t6")
+    n = 16                                  # more threads than cores
+    start = threading.Barrier(n, timeout=60)
+
+    def append(i):
+        start.wait()
+        ledger.log(i, f"o_orderkey > {i}", "done", i)
+
+    threads = [threading.Thread(target=append, args=(i,)) for i in range(n)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    with open(path) as f:
+        lines = [ln for ln in f.read().splitlines() if ln]
+    assert len(lines) == n
+    events = [json.loads(ln) for ln in lines]
+    assert sorted((e["chunk_id"], e["predicate"], e["rows"]) for e in events) == \
+        [(i, f"o_orderkey > {i}", i) for i in range(n)]
+    assert ledger.pending(list(range(n))) == []
 
 
 def test_migrate_chunked_csv_returns_source_count(spark, sf_dir, tmp_path):

@@ -11,7 +11,11 @@ from dbms_spark.sources.catalog import load_table
 
 @pytest.fixture(scope="module")
 def orders(spark, sf_dir):
-    return load_table(spark, sf_dir, "orders").cache()
+    df = load_table(spark, sf_dir, "orders").cache()
+    yield df
+    # released, so later modules' identical load_table plans are not
+    # served from this cache (their job counts would depend on order)
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
