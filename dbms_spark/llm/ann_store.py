@@ -9,7 +9,7 @@ wrong for a nightly intake loop at 10⁹ vectors.  This store removes
 the guard from the data plane entirely: redelivery is decided by the
 manifest WATERMARK before any Spark job runs (the obsolete-message
 skip the CDC consumer uses, reference message/tidb/consumer.go:446-448,
-and the exact pointer pattern of the streaming ledgers,
+and the manifest commit every streaming ledger shares,
 streaming/incremental_agg.py).  An append therefore runs ONE O(batch)
 job: encode the batch against the frozen quantizers and write it as a
 new SEGMENT; no index row is read, shuffled, or rewritten.

@@ -62,18 +62,9 @@ def _unroll() -> bool:
     at gate scale (2k rows: q51 measured 1.3 → ~3 s).  The mode is
     AUTO-SELECTED per operator call from a cheap Catalyst row
     estimate (:func:`_auto_unroll` wraps each entrypoint; crossover
-    ~10⁵ rows/stage per docs/SCALE.md), with SPARK_GRAFT_ANN_UNROLL
-    as a manual override: 1/true forces unrolled, 0/false forces HOF,
-    unset defers to the estimate.  Both forms are bit-identical (same
-    left-to-right FP order), pinned by test — auto-switching can
+    ~10⁵ rows/stage per docs/SCALE.md).  Both forms are bit-identical
+    (same left-to-right FP order), pinned by test — auto-switching can
     never change a result."""
-    import os
-
-    env = os.environ.get("SPARK_GRAFT_ANN_UNROLL", "").lower()
-    if env in ("1", "true", "yes"):
-        return True
-    if env in ("0", "false", "no"):
-        return False
     return bool(getattr(_AUTO_UNROLL, "value", False))
 
 
@@ -136,8 +127,7 @@ def _auto_unroll_args(fn):
 
 def _dot_pair_spark(a: str, b: str, dims: int | None) -> str:
     """Pair dot product: unrolled scalar arithmetic when the width is
-    statically known AND the mode resolves to unrolled (auto row
-    estimate or SPARK_GRAFT_ANN_UNROLL override — see
+    statically known AND the row estimate selects unrolled (see
     :func:`_unroll`), the generic HOF fold otherwise."""
     if dims is None or not _unroll():
         return _DOT_SPARK.format(a=a, b=b)
@@ -905,8 +895,8 @@ def train_pq_codebooks(parquet_path: str, m: int = 8, ksub: int = 16,
 
 def _pq_dist_spark(vec: str, base: int, comps: list[int]) -> str:
     """Squared L2 of ``vec[base .. base+d-1]`` (1-based) vs a literal
-    centroid — unrolled under SPARK_GRAFT_ANN_UNROLL (see
-    :func:`_unroll`), the HOF fold otherwise; identical FP order."""
+    centroid — unrolled when :func:`_unroll` selects it, the HOF fold
+    otherwise; identical FP order."""
     if _unroll():
         terms = [f"(element_at({vec}, {base + t}) - {c}D)"
                  f" * (element_at({vec}, {base + t}) - {c}D)"

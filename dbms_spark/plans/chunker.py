@@ -92,7 +92,12 @@ def plan_chunks(
     fraction = min(1.0, sample_rows / max(total, 1))
     sample = df.select(*key_cols)
     if fraction < 1.0:
-        sample = sample.sample(fraction=fraction, seed=42)
+        # keep a row by a hash of its key, not by a per-partition
+        # random stream (``sample(seed=)``): the same input then plans
+        # the same bounds under any split size or core count, so a
+        # resumed migrate's chunks still tile with its done ones
+        sample = sample.where(F.pmod(F.xxhash64(*key_cols), F.lit(1 << 32))
+                              < F.lit(int(fraction * (1 << 32))))
     ckeys = [_collated(F.col(c), fields[c], collation) for c in key_cols]
     w = Window.orderBy(*ckeys)
     tiles = (

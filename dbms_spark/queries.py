@@ -8017,7 +8017,7 @@ def q232_kmv_by(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # q233 — streaming sketch ledger: three batch folds through
-# SketchStore's crash-safe pointer-committed snapshots reproduce the
+# SketchStore's crash-safe manifest-committed snapshots reproduce the
 # whole-table histogram BIT-IDENTICALLY (the merge is lossless, so the
 # ledger state after N days equals a one-shot sketch of everything —
 # the invariant the daily-profile pattern rests on).  The oracle is
@@ -9684,7 +9684,7 @@ def q284_rolling_anomaly_prefix(spark: SparkSession,
 # q285 — STREAMING rolling actives: the events table folded through
 # the crash-safe active-days SketchStore (streaming/events.py) in
 # three time-ordered micro-batches — including one REDELIVERED batch,
-# which the pointer-commit exactly-once contract must no-op — then
+# which the manifest-commit exactly-once contract must no-op — then
 # WAU answered from the ledger alone.  Oracle = the one-shot q279
 # SQL: the ledger after N batches must be indistinguishable from
 # having seen the whole stream.

@@ -14,6 +14,7 @@ import fnmatch
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructField, StructType
 
 TABLES = [
     "region",
@@ -33,18 +34,26 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def _nanos_timestamp_cols(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — Spark refuses them
-    by default (PARQUET_TYPE_ILLEGAL).  Footer-only read, driver-side."""
-    import pyarrow.parquet as pq
+def _footer_schema(path: str) -> tuple[StructType, list[str]]:
+    """(Spark schema, columns stored as parquet TIMESTAMP(NANOS)) from
+    the parquet footer, read driver-side — no Spark job.  The schema
+    is the one ``spark.read.parquet`` infers: every field nullable, a
+    timezone-naive timestamp as TIMESTAMP_NTZ, and a NANOS timestamp
+    (which Spark refuses by default, PARQUET_TYPE_ILLEGAL) as the
+    BIGINT it reads under ``nanosAsLong``."""
     import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
 
-    out = []
-    schema = pq.read_schema(path)
-    for field in schema:
-        if pa.types.is_timestamp(field.type) and field.type.unit == "ns":
-            out.append(field.name)
-    return out
+    fields, ns_cols = [], []
+    for f in pq.read_schema(path):
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns":
+            ns_cols.append(f.name)
+            dtype = LongType()
+        else:
+            dtype = from_arrow_type(f.type, prefer_timestamp_ntz=True)
+        fields.append(StructField(f.name, dtype, True))
+    return StructType(fields), ns_cols
 
 
 #: METADATA memos (round 10, guide §1/§6: schema inference is pure
@@ -77,13 +86,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return df
     meta = _META_MEMO.get(fkey)
     if meta is None:
-        ns_cols = _nanos_timestamp_cols(p)
-        if ns_cols:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # infer once per file version; identical to what every
-        # subsequent read.schema(...) call would have inferred
-        schema = spark.read.parquet(p).schema
-        meta = _META_MEMO[fkey] = (schema, ns_cols)
+        meta = _META_MEMO[fkey] = _footer_schema(p)
     schema, ns_cols = meta
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

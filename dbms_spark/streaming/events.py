@@ -3,9 +3,10 @@ judge ask #5): WAU/MAU and funnel counters maintained crash-safely
 from a streaming source, so the CDC/streaming layer and the
 event-analytics family compose.
 
-Both stores ride :class:`dbms_spark.streaming.incremental_agg.
-SketchStore`'s snapshot + pointer-commit machinery: one atomic POSIX
-rename carries the state switch AND the applied-batch marker, so
+Both stores are :class:`dbms_spark.streaming.incremental_agg.
+SketchStore` ledgers, which commit like every store in the repo:
+one atomic replace of the table-store ``manifest.json`` carries the
+new snapshot AND the applied batch id (its watermark), so
 foreachBatch redeliveries after a crash apply exactly once (the q233
 contract).  What differs is the maintained state:
 
@@ -38,8 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from dbms_spark.streaming.cdc import ParquetTableStore
-from dbms_spark.streaming.incremental_agg import SketchStore
+from dbms_spark.streaming.incremental_agg import LedgerStore, SketchStore
 from dbms_spark.plans.parallelism import literal_df
 
 
@@ -257,9 +257,7 @@ def funnel_store(spark, path: str, steps: list[str],
     the batch :func:`dbms_spark.operators.events.funnel` chain over
     the concatenation.  ``fold_first_batch=True``: build only projects
     the batch, so the anchor-chain state shape comes from the merge —
-    which must run on batch #1 too, against the empty state relation
-    (the flag replaces the former _FoldStore apply_batch override that
-    duplicated the base pointer/redelivery/commit sequence)."""
+    which must run on batch #1 too, against the empty state relation."""
     return SketchStore(
         spark, path,
         build_fn=lambda b: b.select(
@@ -483,11 +481,12 @@ def session_stats_from_store(store: SketchStore,
         .alias("duration_seconds"))
 
 
-class DayBucketLedger(ParquetTableStore):
+class DayBucketLedger(LedgerStore):
     """GROWING-STATE ledger with DAY-keyed buckets — the scale form
-    of the SketchStore event ledgers.  SketchStore commits rewrite
-    the FULL snapshot every batch: exactly right for bounded state
-    (HLL registers, funnel anchors, counters), quadratic over time
+    of the SketchStore event ledgers.  A SketchStore keeps its state
+    in ONE bucket and rewrites the FULL snapshot every batch: exactly
+    right for bounded state (HLL registers, funnel anchors,
+    counters), quadratic over time
     for state that grows with activity (the active-days relation, the
     session ledger).  The CDC ParquetTableStore already bounds apply
     cost by touched buckets, but its buckets hash on the KEY — a
@@ -499,16 +498,14 @@ class DayBucketLedger(ParquetTableStore):
     so per-batch I/O is O(batch days × bucket size), never O(state).
     Everything else — atomic manifest replace as the single commit
     point, watermark-carried batch ids (redelivery no-op), time
-    travel, GC — is inherited.  Rows must carry a ``day`` TIMESTAMP
+    travel, GC, ``read`` and ``last_batch_id`` — is the
+    :class:`~dbms_spark.streaming.incremental_agg.LedgerStore` base
+    SketchStore shares.  Rows must carry a ``day`` TIMESTAMP
     column (UTC midnights, the active_days contract)."""
-
-    TABLE = "ledger"
 
     def __init__(self, spark, path: str, schema: str,
                  key_cols: list[str], days_per_bucket: int = 1):
-        super().__init__(spark=spark, base_path=path,
-                         schemas={self.TABLE: schema},
-                         key_cols={self.TABLE: list(key_cols)})
+        super().__init__(spark, path, schema, key_cols)
         self.days_per_bucket = days_per_bucket
 
     #: bucket id for NULL-day rows (a NULL-ts event survives the
@@ -559,12 +556,6 @@ class DayBucketLedger(ParquetTableStore):
                .dropDuplicates(cols)
                .withColumn("_kb", self._day_bucket()))
         self._commit_buckets(self.TABLE, manifest, touched, out, bid)
-
-    def read(self) -> DataFrame:  # type: ignore[override]
-        return self._read_buckets(self.TABLE)
-
-    def last_batch_id(self) -> int:
-        return self.get_watermark(self.TABLE)
 
 
 class ActiveDaysDayLedger(DayBucketLedger):

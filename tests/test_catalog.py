@@ -40,3 +40,39 @@ def test_filter_tables():
     assert filter_tables(names, ["line*"], None) == ["lineitem"]
     assert filter_tables(names, None, ["events"]) == ["orders", "lineitem"]
     assert filter_tables(names, ["*"], ["*s"]) == ["lineitem"]
+
+
+def test_footer_schema_matches_spark_inference(spark, sf_dir, tmp_path):
+    """The schema ``load_table`` derives from the parquet footer (no
+    Spark job) equals what ``spark.read.parquet`` infers, for every
+    corpus table and for a file holding the types the corpus lacks:
+    NANOS and UTC-adjusted timestamps, decimals, required fields."""
+    import datetime
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dbms_spark.sources.catalog import TABLES, _footer_schema, table_path
+
+    odd = str(tmp_path / "odd.parquet")
+    ts = datetime.datetime(2024, 1, 2, 3, 4, 5, 6789)
+    pq.write_table(pa.table({
+        "ns": pa.array([ts], pa.timestamp("ns")),
+        "utc": pa.array([ts], pa.timestamp("us", tz="UTC")),
+        "dec": pa.array([1], pa.decimal128(12, 2)),
+        "req": pa.array([1], pa.int32()),
+        "vec": pa.array([[1.0, 2.0]], pa.list_(pa.float32())),
+        "d": pa.array([ts.date()], pa.date32()),
+    }, schema=pa.schema([
+        ("ns", pa.timestamp("ns")), ("utc", pa.timestamp("us", tz="UTC")),
+        ("dec", pa.decimal128(12, 2)), pa.field("req", pa.int32(), nullable=False),
+        ("vec", pa.list_(pa.float32())), ("d", pa.date32())])),
+        odd, coerce_timestamps=None, version="2.6")
+    paths = [table_path(sf_dir, t) for t in TABLES
+             if os.path.exists(table_path(sf_dir, t))]
+    assert len(paths) == len(TABLES)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    for p in [*paths, odd]:
+        assert _footer_schema(p)[0] == spark.read.parquet(p).schema, p
+    assert _footer_schema(odd)[1] == ["ns"]

@@ -295,15 +295,15 @@ def test_apply_prunes_untouched_buckets(store, spark):
 
 
 @pytest.mark.parametrize(
-    "kind", ["table_store", "ann_store", "agg_pointer", "agg_legacy_pointer", "live_manifest"])
+    "kind", ["table_store", "ann_store", "agg_pointer", "live_manifest"])
 def test_manifest_commit_fsyncs_before_replace(spark, tmp_path, monkeypatch, kind):
     """Durability, shown by call order: what a commit publishes (and a
     store manifest's history entry) is fsynced BEFORE the replace or
     rename publishes it — else a power loss can keep the rename but
     not the content, and an empty manifest or pointer wedges every
     later read.  Covers every replace-writer: the table and ANN store
-    manifests, the AggStore pointer (commit and legacy-layout
-    migration) and the compaction ``_LIVE_MANIFEST``."""
+    manifests, a SketchStore apply's manifest commit (``agg_pointer``:
+    an AggStore batch) and the compaction ``_LIVE_MANIFEST``."""
     from dbms_spark.llm.ann_store import AnnIndexStore
     from dbms_spark.operators import migrate
     from dbms_spark.streaming import incremental_agg as IA
@@ -324,21 +324,15 @@ def test_manifest_commit_fsyncs_before_replace(spark, tmp_path, monkeypatch, kin
                 ann._commit_manifest({"version": 3, "watermark": 7})
         published = os.path.join(root, "manifest.json")
         durable = [os.path.join(root, "manifests", "v3.json"), published]
-    elif kind.startswith("agg"):
+    elif kind == "agg_pointer":
         agg = IA.AggStore(spark, str(tmp_path / "agg"), ["region"], ["amount"],
                           {"region": "string", "amount": "bigint"})
-        if kind == "agg_pointer":
-            def commit():
-                agg._commit(spark.range(1), None, 0)
-        else:   # a pre-pointer store: parquet under the path + a batch marker
-            spark.range(3).write.parquet(agg.path)
-            with open(agg.path + ".applied_batch", "w") as f:
-                f.write("4")
+        root = agg.table_path(agg.TABLE)
 
-            def commit():
-                assert agg._pointer() == ("v_000000", 4)
-        published = os.path.join(agg.path, IA.AggStore._POINTER)
-        durable = [published]
+        def commit():
+            agg.apply_batch(spark.createDataFrame([], cdc.CDC_EVENT_SCHEMA), batch_id=0)
+        published = os.path.join(root, "manifest.json")
+        durable = [os.path.join(root, "manifests", "v1.json"), published]
     else:
         live = tmp_path / "live"
         live.mkdir()

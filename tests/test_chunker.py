@@ -34,6 +34,24 @@ def test_chunks_balanced(spark, sf_dir):
     assert max(counts) < 2.2 * avg and min(counts) > 0.3 * avg, counts
 
 
+def test_sampled_plan_independent_of_partitioning(spark, sf_dir):
+    """Above ``sample_rows`` the plan samples; the sample must depend
+    on the rows alone, not on how the input is split: the same table
+    read as 3 or as 6 partitions plans identical bounds.  Otherwise a
+    migrate resumed under another core count or split size re-plans,
+    and its pending chunks no longer tile with its done ones."""
+    df = load_table(spark, sf_dir, "lineitem")
+    keys = ["l_orderkey", "l_linenumber"]
+    assert df.count() > 4 * 500
+    plans = [chunker.plan_chunks(df.repartition(n), keys, 8, sample_rows=500)
+             for n in (3, 6)]
+    assert plans[0] == plans[1]
+    assert len(plans[0].bounds) == 7
+    counts = [df.filter(p).count() for p in chunker.predicates(plans[0])]
+    assert sum(counts) == df.count()
+    assert max(counts) < 2.2 * sum(counts) / len(counts), counts
+
+
 def test_composite_key_partition(spark, sf_dir):
     df = load_table(spark, sf_dir, "lineitem")
     plan = chunker.plan_chunks(df, ["l_returnflag", "l_orderkey", "l_linenumber"], 6)

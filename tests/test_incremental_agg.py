@@ -93,62 +93,74 @@ def test_apply_batch_idempotent_under_redelivery(spark, tmp_path):
 
 def test_apply_batch_crash_between_snapshot_and_pointer(spark, tmp_path, monkeypatch):
     """Crash injected AFTER the new snapshot is written but BEFORE the
-    pointer rename: the store must still read the OLD state with the
-    OLD batch marker, and the redelivered batch must then apply exactly
-    once (the pointer rename is the single atomic commit point)."""
+    ``manifest.json`` replace: the store must still read the OLD state
+    with the OLD batch marker, and the redelivered batch must then
+    apply exactly once (the manifest replace is the single atomic
+    commit point)."""
     import os as _os
+
+    from dbms_spark.streaming import cdc as CDC
+
     store = IA.AggStore(spark, str(tmp_path / "agg4"), ["region"], ["amount"], TYPES)
     b0 = _ev(spark, [("INSERT", 1, 1, {"id": 1, "region": "eu", "amount": 10})])
     store.apply_batch(b0, batch_id=0)
 
-    real_rename = _os.rename
+    real_replace = _os.replace
 
-    def crashing_rename(src, dst):
-        if dst.endswith(IA.AggStore._POINTER):
-            raise OSError("simulated crash before pointer commit")
-        return real_rename(src, dst)
+    def crashing_replace(src, dst):
+        if dst.endswith("manifest.json"):
+            raise OSError("simulated crash before manifest commit")
+        return real_replace(src, dst)
 
     b1 = _ev(spark, [("INSERT", 2, 2, {"id": 2, "region": "eu", "amount": 5})])
-    monkeypatch.setattr(IA.os, "rename", crashing_rename)
+    jsc = spark.sparkContext._jsc
+    pinned = set(jsc.getPersistentRDDs().keys())
+    monkeypatch.setattr(CDC.os, "replace", crashing_replace)
     try:
         store.apply_batch(b1, batch_id=1)
     except OSError:
         pass
-    monkeypatch.setattr(IA.os, "rename", real_rename)
+    monkeypatch.setattr(CDC.os, "replace", real_replace)
     # old state + old marker fully intact
     assert store.last_batch_id() == 0
     got = {r["region"]: (r["n_rows"], r["sum_amount"]) for r in store.read().collect()}
     assert got == {"eu": (1, 10)}
-    # redelivery applies exactly once; orphan snapshot from the crash swept
+    # redelivery applies exactly once; only the bucket dirs the
+    # retained manifests reference are left on disk
     store.apply_batch(b1, batch_id=1)
     got = {r["region"]: (r["n_rows"], r["sum_amount"]) for r in store.read().collect()}
     assert got == {"eu": (2, 15)}
-    snaps = [d for d in _os.listdir(tmp_path / "agg4") if d.startswith("v_")]
-    assert len(snaps) == 1
+    assert set(jsc.getPersistentRDDs().keys()) <= pinned   # nothing left pinned
+    m = store._read_manifest(store.TABLE)
+    referenced = {rel for r in store._retained_manifests(store.TABLE, m)
+                  for rel in r["buckets"].values()}
+    files_root = _os.path.join(store.table_path(store.TABLE), "files")
+    on_disk = {_os.path.join("files", v, kb)
+               for v in _os.listdir(files_root)
+               for kb in _os.listdir(_os.path.join(files_root, v))}
+    assert on_disk == referenced
 
 
-def test_agg_store_migrates_legacy_layout(spark, tmp_path):
-    """A store written by the pre-pointer layout (parquet directly at
-    path + '.applied_batch' marker) must open with its state and
-    marker intact — not silently as an empty store."""
-    import os as _os
-    path = str(tmp_path / "agg5")
-    legacy = spark.createDataFrame([("eu", 2, 25)],
-                                   "region string, n_rows bigint, sum_amount bigint")
-    legacy.coalesce(1).write.parquet(path)
-    with open(path + ".applied_batch", "w") as f:
-        f.write("3")
-    store = IA.AggStore(spark, path, ["region"], ["amount"], TYPES)
-    assert store.last_batch_id() == 3
-    got = {r["region"]: (r["n_rows"], r["sum_amount"]) for r in store.read().collect()}
-    assert got == {"eu": (2, 25)}
-    # and it keeps applying exactly-once from there
-    b = _ev(spark, [("INSERT", 9, 9, {"id": 9, "region": "eu", "amount": 5})])
-    store.apply_batch(b, batch_id=3)   # already applied: no-op
-    store.apply_batch(b, batch_id=4)
-    got = {r["region"]: (r["n_rows"], r["sum_amount"]) for r in store.read().collect()}
-    assert got == {"eu": (3, 30)}
-    assert _os.path.exists(_os.path.join(path, "CURRENT"))
+def test_store_of_retired_pointer_layout_raises(spark, tmp_path):
+    """A store written in the retired layout — a ``CURRENT`` pointer
+    under the path, or a ``<path>.applied_batch`` marker beside it —
+    must refuse to open: read as empty state, every batch it already
+    holds would be applied again."""
+    import pytest
+
+    pointer = tmp_path / "ptr"
+    pointer.mkdir()
+    (pointer / "CURRENT").write_text("v_000003 3")
+    with pytest.raises(ValueError, match="CURRENT"):
+        IA.AggStore(spark, str(pointer), ["region"], ["amount"], TYPES)
+    marker = tmp_path / "legacy"
+    spark.createDataFrame([("eu", 2, 25)],
+                          "region string, n_rows bigint, sum_amount bigint"
+                          ).coalesce(1).write.parquet(str(marker))
+    (tmp_path / "legacy.applied_batch").write_text("3")
+    with pytest.raises(ValueError, match="applied_batch"):
+        IA.SketchStore(spark, str(marker), lambda b: b, lambda c, d: d,
+                       "region string, n_rows bigint, sum_amount bigint")
 
 
 def test_agg_store_behind_foreach_batch(spark, tmp_path):
@@ -190,82 +202,6 @@ def test_update_without_old_image_contributes_nothing_negative(spark):
     d = IA.batch_delta(ev, ["region"], ["amount"], TYPES)
     rows = {r["region"]: (r["d_count"], r["d_amount"]) for r in d.collect()}
     assert rows == {"eu": (1, 10)}  # and no None key
-
-
-def test_agg_store_migration_crash_windows(spark, tmp_path):
-    """The legacy->pointer migration is crash-safe at every step:
-    (1) files staged into v_000000.migrating but no pointer yet,
-    (2) pointer committed but the staged dir not yet renamed,
-    (3) an OLD-code partial migration (files already in v_000000, no
-    pointer, marker surviving).  Each reopen must see the state and
-    batch id — never an empty store that re-applies history."""
-    import os as _os
-
-    def legacy_store(name, bid):
-        path = str(tmp_path / name)
-        spark.createDataFrame(
-            [("eu", 2, 25)], "region string, n_rows bigint, sum_amount bigint"
-        ).coalesce(1).write.parquet(path)
-        with open(path + ".applied_batch", "w") as f:
-            f.write(str(bid))
-        return path
-
-    def check(path):
-        store = IA.AggStore(spark, path, ["region"], ["amount"], TYPES)
-        assert store.last_batch_id() == 3
-        got = {r["region"]: (r["n_rows"], r["sum_amount"])
-               for r in store.read().collect()}
-        assert got == {"eu": (2, 25)}
-        assert _os.path.isdir(_os.path.join(path, "v_000000"))
-        assert not _os.path.isdir(_os.path.join(path, "v_000000.migrating"))
-
-    # (1) crash after staging moves, before the pointer write
-    p1 = legacy_store("mig1", 3)
-    mig = _os.path.join(p1, "v_000000.migrating")
-    _os.makedirs(mig)
-    for f in list(_os.listdir(p1)):
-        if f.startswith("part-") or f == "_SUCCESS":
-            _os.rename(_os.path.join(p1, f), _os.path.join(mig, f))
-    check(p1)
-
-    # (2) crash after the pointer committed, before the dir rename
-    p2 = legacy_store("mig2", 3)
-    mig = _os.path.join(p2, "v_000000.migrating")
-    _os.makedirs(mig)
-    for f in list(_os.listdir(p2)):
-        if f.startswith("part-") or f == "_SUCCESS":
-            _os.rename(_os.path.join(p2, f), _os.path.join(mig, f))
-    with open(_os.path.join(p2, "CURRENT"), "w") as f:
-        f.write("v_000000 3")
-    check(p2)
-
-    # (3) old-code crash: files already inside v_000000, no pointer,
-    # marker survives -> resurrected with the marker's batch id
-    p3 = legacy_store("mig3", 3)
-    snap = _os.path.join(p3, "v_000000")
-    _os.makedirs(snap)
-    for f in list(_os.listdir(p3)):
-        if f.startswith("part-") or f == "_SUCCESS":
-            _os.rename(_os.path.join(p3, f), _os.path.join(snap, f))
-    check(p3)
-
-
-def test_agg_store_uncommitted_first_batch_not_resurrected(spark, tmp_path):
-    """A v_000000 WITHOUT pointer or legacy marker is an uncommitted
-    first apply_batch (the redelivery window) — it must open as EMPTY
-    so the redelivered batch rebuilds it, not double-applies."""
-    path = str(tmp_path / "fresh1")
-    snap = str(tmp_path / "fresh1" / "v_000000")
-    spark.createDataFrame(
-        [("eu", 1, 10)], "region string, n_rows bigint, sum_amount bigint"
-    ).coalesce(1).write.parquet(snap)
-    store = IA.AggStore(spark, path, ["region"], ["amount"], TYPES)
-    assert store.last_batch_id() == -1
-    b0 = _ev(spark, [("INSERT", 1, 1, {"id": 1, "region": "eu", "amount": 10})])
-    store.apply_batch(b0, batch_id=0)   # the redelivery
-    got = {r["region"]: (r["n_rows"], r["sum_amount"])
-           for r in store.read().collect()}
-    assert got == {"eu": (1, 10)}
 
 
 def test_sketch_store_hist_ledger_and_redelivery(spark, tmp_path):

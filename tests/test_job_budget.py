@@ -30,8 +30,9 @@ JOB_BUDGET = {
     # a driver-side journal and runs no job
     "data_migrate": 8,
     # custom-SQL migrate over registered views: ONE observed write;
-    # the count is not a second run of the user's query (the catalog's
-    # once-per-file schema inference is warmed first)
+    # the count is not a second run of the user's query, and the
+    # catalog reads each table's schema from its parquet footer, so a
+    # cold session registers its views without a job
     "sql_migrate": 1,
     # clean 10-chunk verify: ONE collect of the chunk-sum join (both
     # sides' parallelism guards and sum exchanges); the row counts are
@@ -47,6 +48,14 @@ JOB_BUDGET = {
     # row diff of the mismatched chunks: the range-pruned read of each
     # side restricted by an isin on the chunk id, no broadcast
     "drilldown_chunks": 5,
+    # one batch of a hist SketchStore: the build and the merge with
+    # the stored snapshot, then its write; the manifest commit runs no
+    # job and the snapshot is read with its declared schema
+    "sketch_store_apply_batch": 4,
+    # one time-ordered batch of the active-days store: the merge's
+    # probe of the batch's days against the stored ledger, then the
+    # snapshot write
+    "active_days_store_batch": 6,
 }
 
 
@@ -162,6 +171,52 @@ def test_sql_migrate_job_budget(spark, sf_dir, tmp_path):
         "SELECT o_orderkey FROM orders WHERE rand() < 0.5", sf_dir, out)))
     assert n[0] == spark.read.parquet(out).count()
     assert jobs <= JOB_BUDGET["sql_migrate"], jobs
+
+
+def test_sql_migrate_cold_session_job_budget(spark, sf_dir, tmp_path, monkeypatch):
+    """With no table loaded yet, registering every view reads footers
+    on the driver: the migrate still runs one job."""
+    from dbms_spark.sources import catalog
+
+    monkeypatch.setattr(catalog, "_META_MEMO", {})
+    monkeypatch.setattr(catalog, "_DF_MEMO", {})
+    out = str(tmp_path / "sink")
+    n = []
+    jobs = _jobs(spark, "budget-sql_migrate-cold", lambda: n.append(DbmsEngine(spark).sql_migrate(
+        "SELECT o_orderkey FROM orders WHERE rand() < 0.5", sf_dir, out)))
+    assert n[0] == spark.read.parquet(out).count()
+    assert jobs <= JOB_BUDGET["sql_migrate"], jobs
+
+
+def test_sketch_store_apply_batch_job_budget(spark, tmp_path):
+    from dbms_spark.operators.sketch import hist_build, hist_merge
+    from dbms_spark.streaming.incremental_agg import SketchStore
+
+    store = SketchStore(
+        spark, str(tmp_path / "hist"),
+        build_fn=lambda b: hist_build(b, "v", 0.0, 100.0, 20),
+        merge_fn=hist_merge, schema="bin bigint, cnt bigint")
+    full = spark.range(3000).selectExpr("id", "CAST(id % 100 AS DOUBLE) AS v")
+    jobs = [_jobs(spark, f"budget-sketch_store-{i}", lambda: store.apply_batch(
+        full.filter(f"id % 3 = {i}"), batch_id=i)) for i in range(3)]
+    assert store.read().agg(F.sum("cnt")).first()[0] == 3000
+    assert max(jobs) <= JOB_BUDGET["sketch_store_apply_batch"], jobs
+
+
+def test_active_days_store_job_budget(spark, sf_dir, tmp_path):
+    from dbms_spark.operators.events import active_days
+    from dbms_spark.streaming.events import active_days_store
+
+    ev = load_table(spark, sf_dir, "events")
+    c1, c2 = (F.lit(c).cast("timestamp") for c in ("2024-01-12", "2024-01-22"))
+    batches = [ev.filter(F.col("ts") < c1),
+               ev.filter((F.col("ts") >= c1) & (F.col("ts") < c2)),
+               ev.filter(F.col("ts") >= c2)]
+    store = active_days_store(spark, str(tmp_path / "days"))
+    jobs = [_jobs(spark, f"budget-active_days-{i}", lambda: store.apply_batch(b, batch_id=i))
+            for i, b in enumerate(batches)]
+    assert store.read().count() == active_days(ev).count()
+    assert max(jobs) <= JOB_BUDGET["active_days_store_batch"], jobs
 
 
 def _drifted(src):

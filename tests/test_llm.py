@@ -1827,9 +1827,10 @@ def test_bm25_index_query_identity_and_pruning(spark, tmp_path):
 
 
 def test_ann_unroll_mode_bit_identical(spark, sf_dir, monkeypatch):
-    """SPARK_GRAFT_ANN_UNROLL swaps the interpreted HOF folds for
-    unrolled scalar arithmetic (3-8x per-row on big corpora, a fixed
-    per-stage compile cost — docs/SCALE.md); both modes must be
+    """Past the row-estimate crossover the kernels swap the
+    interpreted HOF folds for unrolled scalar arithmetic (3-8x per-row
+    on big corpora, a fixed per-stage compile cost — docs/SCALE.md),
+    forced here by moving ``_UNROLL_ROWS``; both modes must be
     BIT-identical on every kernel (same left-to-right FP order):
     IVF assign, PQ codes, LSH buckets, in-cell cosine."""
     from dbms_spark.sources.catalog import load_table, table_path
@@ -1851,9 +1852,9 @@ def test_ann_unroll_mode_bit_identical(spark, sf_dir, monkeypatch):
                    S.ivf_topk(emb, qs, cents, k=3).collect()),
         )
 
-    monkeypatch.delenv("SPARK_GRAFT_ANN_UNROLL", raising=False)
+    monkeypatch.setattr(S, "_UNROLL_ROWS", 1 << 62)
     hof = snapshot()
-    monkeypatch.setenv("SPARK_GRAFT_ANN_UNROLL", "1")
+    monkeypatch.setattr(S, "_UNROLL_ROWS", 0)
     unrolled = snapshot()
     assert hof == unrolled
 
@@ -1898,11 +1899,9 @@ def test_fp_cap_contract_shared_across_engines(spark):
 
 
 def test_ann_unroll_auto_selects_from_row_estimate(spark, monkeypatch):
-    """With no env override, the kernel mode is chosen per call from
-    a Catalyst row estimate: small inputs keep the fixed-cost-free
-    HOF form, inputs past the crossover get the unrolled scalar form
-    — and SPARK_GRAFT_ANN_UNROLL=0/1 still forces either mode."""
-    monkeypatch.delenv("SPARK_GRAFT_ANN_UNROLL", raising=False)
+    """The kernel mode is chosen per call from a Catalyst row
+    estimate: small inputs keep the fixed-cost-free HOF form, inputs
+    past the crossover get the unrolled scalar form."""
     df = spark.createDataFrame(
         [(i, [float(i % 7)] * 8) for i in range(4)],
         "vec_id long, embedding array<double>")
@@ -1921,14 +1920,7 @@ def test_ann_unroll_auto_selects_from_row_estimate(spark, monkeypatch):
     monkeypatch.setattr(S, "_UNROLL_ROWS", 0)
     p_big = plan(S.ivf_index_build(df, cents))
     assert "element_at" in p_big
-    # env override beats the estimate in both directions
-    monkeypatch.setenv("SPARK_GRAFT_ANN_UNROLL", "0")
-    assert "element_at" not in plan(S.ivf_index_build(df, cents))
-    monkeypatch.setattr(S, "_UNROLL_ROWS", 100_000)
-    monkeypatch.setenv("SPARK_GRAFT_ANN_UNROLL", "1")
-    assert "element_at" in plan(S.ivf_index_build(df, cents))
     # the decision is call-scoped: nothing leaks into the next call
-    monkeypatch.delenv("SPARK_GRAFT_ANN_UNROLL", raising=False)
     assert not getattr(S._AUTO_UNROLL, "value", False)
     # a real parquet scan yields a usable nonzero estimate
     est = S._estimate_rows(
@@ -2028,7 +2020,7 @@ def test_pca_topk_recall_and_parity(spark, sf_dir, duck, tmp_path):
 def test_pca_unroll_modes_bit_identical(spark, sf_dir, monkeypatch):
     """The PCA kernels ride the same two-mode ladder as the other ANN
     kernels: HOF and unrolled forms are bit-identical, and the mode
-    witness (element_at chains) responds to the override."""
+    witness (element_at chains) follows the row-estimate crossover."""
     from dbms_spark.sources.catalog import load_table, table_path
 
     pr = S.train_pca_projection(table_path(sf_dir, "embeddings"),
@@ -2039,12 +2031,12 @@ def test_pca_unroll_modes_bit_identical(spark, sf_dir, monkeypatch):
         return sorted((r["vec_id"], tuple(r["proj"])) for r in
                       S.pca_project(emb, pr).collect())
 
-    monkeypatch.delenv("SPARK_GRAFT_ANN_UNROLL", raising=False)
+    monkeypatch.setattr(S, "_UNROLL_ROWS", 1 << 62)
     hof = snap()
     plan_hof = (S.pca_project(emb, pr)
                 ._jdf.queryExecution().analyzed().toString())
     assert "element_at" not in plan_hof
-    monkeypatch.setenv("SPARK_GRAFT_ANN_UNROLL", "1")
+    monkeypatch.setattr(S, "_UNROLL_ROWS", 0)
     assert snap() == hof
     plan_unr = (S.pca_project(emb, pr)
                 ._jdf.queryExecution().analyzed().toString())

@@ -9,10 +9,15 @@ import datetime
 from pyspark.sql import functions as F
 
 from dbms_spark.operators import events as E
+from dbms_spark.streaming import cdc as CDC
 from dbms_spark.streaming import events as SE
-from dbms_spark.streaming import incremental_agg as IA
 
 BASE = datetime.datetime(2024, 1, 1)
+
+
+def _persisted(spark) -> set:
+    """Ids of the RDDs the session holds cached or checkpointed."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
 def _ev(spark, rows):
@@ -125,32 +130,34 @@ def test_funnel_store_hot_key_guard_matches_fold(spark, tmp_path):
 
 
 def test_funnel_store_crash_soak(spark, tmp_path, monkeypatch):
-    """Injected crash between snapshot write and pointer commit on
+    """Injected crash between snapshot write and manifest commit on
     EVERY batch, followed by redelivery: state must converge to the
-    batch funnel anyway (the pointer rename is the single atomic
-    commit point, so each crashed apply leaves the previous state
-    intact and the retry applies exactly once)."""
+    batch funnel anyway (the ``manifest.json`` replace is the single
+    atomic commit point, so each crashed apply leaves the previous
+    state intact and the retry applies exactly once)."""
     import os as _os
 
     store = SE.funnel_store(spark, str(tmp_path / "soak"), STEPS)
-    real_rename = _os.rename
+    real_replace = _os.replace
 
-    def crashing_rename(src, dst):
-        if dst.endswith(IA.AggStore._POINTER):
-            raise OSError("simulated crash before pointer commit")
-        return real_rename(src, dst)
+    def crashing_replace(src, dst):
+        if dst.endswith("manifest.json"):
+            raise OSError("simulated crash before manifest commit")
+        return real_replace(src, dst)
 
     for i, batch in enumerate(_time_batches(ROWS, CUTS)):
         bdf = _ev(spark, batch)
-        monkeypatch.setattr(IA.os, "rename", crashing_rename)
+        monkeypatch.setattr(CDC.os, "replace", crashing_replace)
+        pinned = _persisted(spark)
         try:
             store.apply_batch(bdf, batch_id=i)
         except OSError:
             pass
-        monkeypatch.setattr(IA.os, "rename", real_rename)
+        monkeypatch.setattr(CDC.os, "replace", real_replace)
         assert store.last_batch_id() == i - 1  # crash left old marker
         store.apply_batch(bdf, batch_id=i)     # redelivery commits
         assert store.last_batch_id() == i
+        assert _persisted(spark) <= pinned     # nothing left pinned
     got = sorted(tuple(r) for r in
                  SE.funnel_counts_from_store(store, STEPS).collect())
     want = sorted(tuple(r) for r in
@@ -238,23 +245,25 @@ def test_attribution_store_converges_and_crash_soak(spark, tmp_path,
     store = SE.attribution_store(
         spark, str(tmp_path / "attr"), "purchase", ["view", "click"],
         lookback_seconds=look, tiebreak=["event_id"])
-    real_rename = _os.rename
+    real_replace = _os.replace
 
-    def crashing_rename(src, dst):
-        if dst.endswith(IA.AggStore._POINTER):
-            raise OSError("simulated crash before pointer commit")
-        return real_rename(src, dst)
+    def crashing_replace(src, dst):
+        if dst.endswith("manifest.json"):
+            raise OSError("simulated crash before manifest commit")
+        return real_replace(src, dst)
 
     for i, batch in enumerate(_time_batches(rows, CUTS)):
         bdf = _ev(spark, batch)
-        monkeypatch.setattr(IA.os, "rename", crashing_rename)
+        monkeypatch.setattr(CDC.os, "replace", crashing_replace)
+        pinned = _persisted(spark)
         try:
             store.apply_batch(bdf, batch_id=i)
         except OSError:
             pass
-        monkeypatch.setattr(IA.os, "rename", real_rename)
+        monkeypatch.setattr(CDC.os, "replace", real_replace)
         store.apply_batch(bdf, batch_id=i)     # redelivery commits
         store.apply_batch(bdf, batch_id=i)     # second redelivery no-op
+        assert _persisted(spark) <= pinned     # nothing left pinned
     got = {r.touch_type: r.n for r in
            SE.attribution_counts_from_store(store).collect()}
     one_shot = E.attribute_conversions(
@@ -296,23 +305,25 @@ def test_session_store_long_session_and_crash_soak(spark, tmp_path,
     ]
     store = SE.session_store(spark, str(tmp_path / "sess"),
                              gap_minutes=gap_m)
-    real_rename = _os.rename
+    real_replace = _os.replace
 
-    def crashing_rename(src, dst):
-        if dst.endswith(IA.AggStore._POINTER):
-            raise OSError("simulated crash before pointer commit")
-        return real_rename(src, dst)
+    def crashing_replace(src, dst):
+        if dst.endswith("manifest.json"):
+            raise OSError("simulated crash before manifest commit")
+        return real_replace(src, dst)
 
     for i, batch in enumerate(_time_batches(rows, CUTS)):
         bdf = _ev(spark, batch)
-        monkeypatch.setattr(IA.os, "rename", crashing_rename)
+        monkeypatch.setattr(CDC.os, "replace", crashing_replace)
+        pinned = _persisted(spark)
         try:
             store.apply_batch(bdf, batch_id=i)
         except OSError:
             pass
-        monkeypatch.setattr(IA.os, "rename", real_rename)
+        monkeypatch.setattr(CDC.os, "replace", real_replace)
         store.apply_batch(bdf, batch_id=i)
         store.apply_batch(bdf, batch_id=i)     # redelivery no-op
+        assert _persisted(spark) <= pinned     # nothing left pinned
     got = sorted(tuple(r) for r in
                  SE.session_stats_from_store(store).collect())
     from dbms_spark.operators.joins import sessionize
@@ -371,8 +382,6 @@ def test_day_ledger_crash_soak(spark, tmp_path, monkeypatch):
     point) on every batch: state must stay at the previous consistent
     snapshot, and the redelivered apply must commit exactly once."""
     import os as _os
-
-    from dbms_spark.streaming import cdc as CDC
 
     led = SE.ActiveDaysDayLedger(spark, str(tmp_path / "soakday"))
     real_replace = _os.replace
@@ -586,8 +595,6 @@ def test_attribution_day_ledger_matches_snapshot_store(spark, tmp_path):
 
 def test_attribution_day_ledger_crash_soak(spark, tmp_path, monkeypatch):
     import os as _os
-
-    from dbms_spark.streaming import cdc as CDC
 
     led = SE.AttributionDayLedger(
         spark, str(tmp_path / "asoak"), "purchase", ["view", "click"],

@@ -2,7 +2,7 @@
 """Incremental ANN index smoke (round-9 judge ask #4): O(batch)
 append vs full rebuild at a corpus ~100x the nightly batch.
 
-    python tools/ann_smoke.py [replicas]
+    python tools/ann_smoke.py [replicas] [auto|unrolled|hof]
 
 Replicates the sf0.1 embeddings table ``replicas`` times (ids
 shifted per replica — the scale_smoke recipe), persists the IVF+PQ
@@ -35,13 +35,11 @@ SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def main() -> None:
     replicas = int(sys.argv[1]) if len(sys.argv) > 1 else 100
-    env = os.environ.get("SPARK_GRAFT_ANN_UNROLL", "").lower()
-    # default is now AUTO: the operators pick unrolled past the
-    # ~10^5-rows/stage crossover from a Catalyst row estimate; the
-    # env var remains a manual override in either direction
-    mode = {"1": "forced-unrolled", "true": "forced-unrolled",
-            "yes": "forced-unrolled", "0": "forced-hof",
-            "false": "forced-hof", "no": "forced-hof"}.get(env, "auto")
+    # auto: the operators pick unrolled past the ~10^5-rows/stage
+    # crossover from a Catalyst row estimate; forcing a mode moves
+    # that crossover to 0 rows (unrolled) or out of reach (hof)
+    mode = sys.argv[2] if len(sys.argv) > 2 else "auto"
+    S._UNROLL_ROWS = {"auto": S._UNROLL_ROWS, "unrolled": 0, "hof": 1 << 62}[mode]
     spark = get_spark("ann_smoke")
     emb = load_table(spark, SF, "embeddings")
     base = emb.count()
